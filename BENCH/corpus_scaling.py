@@ -11,8 +11,9 @@ Protocol mirrors BENCH/scaling.py (the crawl-loop harness):
   stage's own jobs, not lazy upstream work;
 * per-stage row counts are emitted and MUST be identical across levels
   (same deterministic input ⇒ same output — a cheap cross-level check);
-* interleave with BENCH/memprobe.py via r5_gated.py for quiet-window
-  adjudication on this bandwidth-contended host.
+* interleave with BENCH/memprobe.py (the round-5 quiet-gate driver
+  r5_gated.py is in git history at 75cfe3a) for quiet-window
+  adjudication on a bandwidth-contended host.
 
 Reproduce: python BENCH/corpus_scaling.py            (both levels)
            CORPUS_LEVELS=16 python BENCH/corpus_scaling.py   (one level)

@@ -32,14 +32,13 @@ class CrawlConfig:
     dequeue_mode: str = "priority"
 
     # URL-seen structure
-    use_bloom: bool = False  # False => exact anti-join (the small-scale oracle path)
-    # exact-path join strategy: True => scan url_seen and semi-probe it with
-    # the broadcast candidate hashes, then broadcast-anti the hits back
-    # (url_seen is SCANNED, never shuffled — it grows O(total crawled) while
-    # both broadcasts stay bounded by one round's candidate set).  False =>
-    # classic shuffle left-anti.  Rounds beyond ~10^7 candidates should use
-    # use_bloom instead (sharded, no broadcast at all).
-    dedup_probe: bool = True
+    # False => exact path (the small-scale oracle): scan url_seen and
+    # semi-probe it with the broadcast candidate hashes, then broadcast-anti
+    # the hits back (url_seen is SCANNED, never shuffled — it grows
+    # O(total crawled) while both broadcasts stay bounded by one round's
+    # candidate set).  Rounds beyond ~10^7 candidates should use the Bloom
+    # filter (sharded, no broadcast at all).
+    use_bloom: bool = False
     bloom_capacity: int = 10_000_000
     bloom_fpr: float = 0.001
     bloom_buckets: int = 64

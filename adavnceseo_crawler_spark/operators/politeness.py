@@ -8,18 +8,26 @@ first, ties broken by URL ascending; then a global top-``batch_size`` cut.
 Scale design (SURVEY.md §4.1, north_rule "skew handled explicitly"): a naive
 ``Window.partitionBy(host)`` puts every URL of a hot host in one task.  With
 Zipf hosts the top host can hold a large fraction of the frontier, so the
-per-host top-k runs in two stages:
+per-key top-k (``topk``) runs in two stages:
 
-  stage 1: top-``budget`` per (host, salt) — salt = xxhash64(url) % S spreads
-           one hot host over S tasks; keeps ≤ S×budget rows per host;
-  stage 2: exact top-``budget`` per host over the ≤ S×budget survivors.
+  stage 1: top-``k`` per (keys, salt) — salt = xxhash64(url) % S spreads
+           one hot key over S tasks; keeps ≤ S×k rows per key;
+  stage 2: exact top-``k`` per key over the ≤ S×k survivors.
 
 The result is identical to the single-stage window (top-k is decomposable),
 but the heavy first pass is skew-free.  The global cut is a
 TakeOrderedAndProject (no full sort).
+
+Layering: ``topk`` is the only window; ``trap_template_cap`` runs it per
+(host, url-template) cell, ``eligible`` composes the trap guard with the
+per-host budget, and the two schedulers add the global cut — lazily
+(``schedule_batch``) or counted with the compact-round complement
+(``schedule_batch_counted``).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -27,31 +35,138 @@ from pyspark.sql import functions as F
 from .urlmine import url_template
 
 
-def per_host_topk(
+def topk(
+    df: DataFrame,
+    keys: tuple[str, ...],
+    k: int,
+    order: list,
+    salt_buckets: int = 8,
+    cache: bool = False,
+) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
+    """Salted two-stage top-``k`` rows per ``keys`` under ``order``.
+
+    Returns (kept, dropped, caches), both frames with ``df``'s columns:
+    ``dropped`` is the lazy ``_rn > k`` complement of the SAME rankings
+    (``df \\ kept`` with zero extra shuffle).  ``cache=True`` pins the
+    rankings so kept and dropped share them; callers that never consume
+    ``dropped`` leave it off — each ranking then has a single consumer and
+    pinning a frontier-sized frame would buy nothing."""
+    cols = df.columns
+    stages = [(keys, "_rn2")]
+    if salt_buckets > 1:
+        df = df.withColumn(
+            "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
+        )
+        stages.insert(0, ((*keys, "_salt"), "_rn1"))
+    dropped, caches = [], []
+    for part, rn in stages:
+        w = Window.partitionBy(*part).orderBy(*order)
+        ranked = df.withColumn(rn, F.row_number().over(w))
+        if cache:
+            ranked = ranked.cache()
+            caches.append(ranked)
+        dropped.append(ranked.filter(F.col(rn) > k).select(*cols))
+        df = ranked.filter(F.col(rn) <= k).select(*cols)
+    return df, reduce(DataFrame.unionByName, dropped), caches
+
+
+def trap_template_cap(
+    df: DataFrame,
+    threshold: int,
+    cap: int,
+    order: list,
+    salt_buckets: int = 8,
+    cache: bool = True,
+) -> tuple[DataFrame, DataFrame, DataFrame, list[DataFrame]]:
+    """Crawler-trap guard (urlmine.mine_url_templates wired into the
+    scheduler): cells of more than ``threshold`` URLs sharing one
+    (host, url-template) are generated URL spaces — calendars, faceted
+    search, session ids — and admit only their top-``cap`` rows per round;
+    every other row passes untouched.  Runs BEFORE the politeness top-k so
+    a trap host's budget goes to its non-trap URLs instead of being eaten
+    by the capped cell (the round-level test's invariant).
+
+    Scale shape: the cell census ``groupBy(host, template)`` is the SAME
+    aggregation mine_url_templates runs (count(1) == count_distinct(url)
+    here — frontier rows are unique by url_hash), map-side combinable, so
+    hot cells partially aggregate before the exchange; the host-level
+    counts the politeness stage needs are a ROLLUP of the cell counts
+    (sum over the one-row-per-cell intermediate), so the corpus is
+    exchanged ONCE for both censuses (plan-pinned in
+    tests/test_trap_recrawl.py).  The flagged-cell set is frequency-bounded
+    (≤ N/threshold rows) and broadcast; only flagged cells' rows pay the
+    ``topk`` window, keyed by (host, template).
+
+    Returns (kept, dropped, host_counts, caches): ``dropped`` rows stay in
+    the frontier (re-considered next round — the politeness-deferral
+    semantics), ``host_counts`` is the (host, _n) rollup for ``eligible``
+    to reuse; ``cache`` is passed to ``topk``."""
+    with_t = df.withColumn("_tmpl", url_template(F.col("url")))
+    cell_counts = with_t.groupBy("host", "_tmpl").agg(
+        F.count(F.lit(1)).alias("_cn")
+    )
+    host_counts = cell_counts.groupBy("host").agg(F.sum("_cn").alias("_n"))
+    trap_cells = F.broadcast(
+        cell_counts.filter(F.col("_cn") > threshold).select("host", "_tmpl")
+    )
+    cols = df.columns
+    clean = with_t.join(trap_cells, ["host", "_tmpl"], "left_anti").select(*cols)
+    trapped = with_t.join(trap_cells, ["host", "_tmpl"], "left_semi")
+    admitted, dropped, caches = topk(
+        trapped, ("host", "_tmpl"), cap, order, salt_buckets, cache
+    )
+    kept = clean.unionByName(admitted.select(*cols))
+    return kept, dropped.select(*cols), host_counts, caches
+
+
+def eligible(
     df: DataFrame,
     budget: int,
+    order: list,
     salt_buckets: int = 8,
-    host: str = "host",
-    url: str = "url",
-    score: str = "score",
-) -> DataFrame:
-    order = [F.desc(score), F.asc(url)]
-    if salt_buckets > 1:
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(url)), F.lit(salt_buckets))
+    trap_threshold: int | None = None,
+    trap_cap: int = 5,
+    complement: bool = False,
+) -> tuple[DataFrame, DataFrame | None, list[DataFrame]]:
+    """Rows that pass the trap guard (when ``trap_threshold`` is set) and
+    the per-host budget, before any global cut.
+
+    BUDGET CAP ELISION: a host whose row count is ≤ budget keeps all its
+    rows, so only rows of OVER-budget hosts go through the window sort.  On
+    a Zipf frontier the over-budget set is the short head (at the 4M-page
+    scaling shape: ~150 of 8000 hosts holding ~half the rows), so roughly
+    half the shuffle-sort work vanishes while the row set stays exactly the
+    per-host window top-k.  The host-count aggregate is map-side combinable
+    with one output row per host; AQE turns the anti/semi probes into
+    broadcasts when that output is small (no explicit hint — at web scale
+    the over-budget head may itself be too large to broadcast).  With the
+    trap guard on, the counts are the cell-census rollup, taken PRE-cap: a
+    host the cap pushes back under budget still takes the window path,
+    where top-k of ≤ budget rows is the identity.
+
+    Returns (eligible, rejected, caches).  ``complement=True`` pins the
+    rankings and returns ``rejected = df \\ eligible`` (trap-capped rows
+    included) with ``df``'s columns; otherwise ``rejected`` is None and
+    ``caches`` is empty."""
+    cols = df.columns
+    rejected, caches = [], []
+    if trap_threshold is not None:
+        df, trap_dropped, counts, caches = trap_template_cap(
+            df, trap_threshold, trap_cap, order, salt_buckets, complement
         )
-        w1 = Window.partitionBy(host, "_salt").orderBy(*order)
-        df = (
-            salted.withColumn("_rn1", F.row_number().over(w1))
-            .filter(F.col("_rn1") <= budget)
-            .drop("_rn1", "_salt")
-        )
-    w2 = Window.partitionBy(host).orderBy(*order)
-    return (
-        df.withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= budget)
-        .drop("_rn2")
+        rejected.append(trap_dropped)
+    else:
+        counts = df.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
+    over_hosts = counts.filter(F.col("_n") > budget).select("host")
+    kept, dropped, topk_caches = topk(
+        df.join(over_hosts, "host", "left_semi"), ("host",), budget, order,
+        salt_buckets, complement,
     )
+    elig = df.join(over_hosts, "host", "left_anti").unionByName(kept)
+    if not complement:
+        return elig, None, []
+    rejected = reduce(DataFrame.unionByName, [*rejected, dropped]).select(*cols)
+    return elig, rejected, caches + topk_caches
 
 
 def _order_for(mode: str) -> list:
@@ -71,109 +186,16 @@ def schedule_batch(
 ) -> DataFrame:
     """Politeness top-k then a global cut — the fully LAZY scheduler (no
     counts, no caches; one job at the caller's action).  Same row set as
-    schedule_batch_counted's ``scheduled`` (when the batch cap cannot bind,
-    the global TakeOrdered is a no-op on the row set; only the row order
-    differs, and no consumer of this entry point is order-sensitive).
+    schedule_batch_counted's ``scheduled``.
 
     mode='priority' (default): score desc, url asc — the intended dequeue
     (url_frontier.py:82-88).  mode='fifo': seq asc, url asc — the live-path
-    LPOP special case (url_frontier.py:240-252, SURVEY.md S3).
-
-    ``trap_threshold`` applies the crawler-trap template cap before the
-    politeness top-k (see trap_template_cap); its cell-census rollup feeds
-    the host counts so the corpus aggregates once."""
+    LPOP special case (url_frontier.py:240-252, SURVEY.md S3)."""
     order = _order_for(mode)
-    counts = None
-    if trap_threshold is not None:
-        df, _, counts, _ = trap_template_cap(
-            df, trap_threshold, trap_cap, order, salt_buckets,
-            want_dropped=False,
-        )
-    per_host = per_host_topk_by(df, budget, salt_buckets, order, counts=counts)
-    return per_host.orderBy(*order).limit(batch_size)
-
-
-def trap_template_cap(
-    df: DataFrame,
-    threshold: int,
-    cap: int,
-    order: list,
-    salt_buckets: int = 8,
-    want_dropped: bool = True,
-) -> tuple[DataFrame, DataFrame | None, DataFrame, list[DataFrame]]:
-    """Crawler-trap guard (urlmine.mine_url_templates wired into the
-    scheduler): cells of more than ``threshold`` URLs sharing one
-    (host, url-template) are generated URL spaces — calendars, faceted
-    search, session ids — and admit only their top-``cap`` rows per round;
-    every other row passes untouched.  Runs BEFORE the politeness top-k so
-    a trap host's budget goes to its non-trap URLs instead of being eaten
-    by the capped cell (the round-level test's invariant).
-
-    Scale shape: the cell census ``groupBy(host, template)`` is the SAME
-    aggregation mine_url_templates runs (count(1) == count_distinct(url)
-    here — frontier rows are unique by url_hash), map-side combinable, so
-    hot cells partially aggregate before the exchange; the host-level
-    counts the politeness stage needs are a ROLLUP of the cell counts
-    (sum over the one-row-per-cell intermediate), so the corpus is
-    exchanged ONCE for both censuses — the template agg rides the exchange
-    the host census used to own (plan-pinned in tests/test_plans.py).
-    The flagged-cell set is frequency-bounded (≤ N/threshold rows) and
-    broadcast; only flagged cells' rows pay the salted two-stage cap
-    window, exactly the politeness skew machinery keyed by (host,
-    template).
-
-    Returns (kept, dropped, host_counts, caches): ``dropped`` rows stay in
-    the frontier (re-considered next round — the politeness-deferral
-    semantics), ``host_counts`` is the (host, _n) rollup for
-    schedule_batch_counted to reuse.
-
-    ``want_dropped=False`` (callers that never consume the complement —
-    the lazy schedule_batch, and MoR rounds where un-dequeued rows simply
-    stay in the frontier base): skips the drop branches AND the ranked-
-    intermediate caches entirely — each window ranking then has a single
-    consumer, so caching it would only pin frontier-sized frames in
-    executor memory for nothing.  Returns ``dropped=None, caches=[]``."""
-    with_t = df.withColumn("_tmpl", url_template(F.col("url")))
-    cell_counts = with_t.groupBy("host", "_tmpl").agg(
-        F.count(F.lit(1)).alias("_cn")
+    elig, _, _ = eligible(
+        df, budget, order, salt_buckets, trap_threshold, trap_cap
     )
-    host_counts = cell_counts.groupBy("host").agg(F.sum("_cn").alias("_n"))
-    trap_cells = cell_counts.filter(F.col("_cn") > threshold).select(
-        "host", "_tmpl"
-    )
-    cols = df.columns
-    clean = with_t.join(
-        F.broadcast(trap_cells), ["host", "_tmpl"], "left_anti"
-    ).select(*cols)
-    trapped = with_t.join(
-        F.broadcast(trap_cells), ["host", "_tmpl"], "left_semi"
-    )
-    if salt_buckets > 1:
-        salted = trapped.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
-        )
-        w1 = Window.partitionBy("host", "_tmpl", "_salt").orderBy(*order)
-        ranked1 = salted.withColumn("_rn1", F.row_number().over(w1))
-        if want_dropped:
-            ranked1 = ranked1.cache()
-            drop1 = ranked1.filter(F.col("_rn1") > cap).select(*cols)
-        else:
-            drop1 = None
-        stage2_in = ranked1.filter(F.col("_rn1") <= cap).drop("_rn1", "_salt")
-    else:
-        ranked1, drop1, stage2_in = None, None, trapped
-    w2 = Window.partitionBy("host", "_tmpl").orderBy(*order)
-    ranked2 = stage2_in.withColumn("_rn2", F.row_number().over(w2))
-    if want_dropped:
-        ranked2 = ranked2.cache()
-    admitted = ranked2.filter(F.col("_rn2") <= cap).select(*cols)
-    if not want_dropped:
-        return clean.unionByName(admitted), None, host_counts, []
-    drop2 = ranked2.filter(F.col("_rn2") > cap).select(*cols)
-    dropped = drop2 if drop1 is None else drop1.unionByName(drop2)
-    kept = clean.unionByName(admitted)
-    caches = [c for c in (ranked1, ranked2) if c is not None]
-    return kept, dropped, host_counts, caches
+    return elig.orderBy(*order).limit(batch_size)
 
 
 def schedule_batch_counted(
@@ -182,7 +204,7 @@ def schedule_batch_counted(
     batch_size: int,
     salt_buckets: int = 8,
     mode: str = "priority",
-    want_rejected: bool = True,
+    complement: bool = True,
     trap_threshold: int | None = None,
     trap_cap: int = 5,
 ) -> tuple[DataFrame, int, DataFrame | None, list[DataFrame]]:
@@ -197,143 +219,34 @@ def schedule_batch_counted(
     * the caller's ``leftover = df ⟕̸ scheduled`` anti-join re-shuffles the
       whole frontier inside the commit barrier (measured 12-16 s of the
       frontier table's commit wall) — but ``df \\ scheduled`` is EXACTLY the
-      filter complement of the window ranking already computed here, so the
-      ranked intermediates are cached once and ``rejected`` is derived by
-      ``_rn > budget`` filters: zero extra shuffle.
+      filter complement of the window rankings ``eligible`` computes, so
+      ``rejected`` costs zero extra shuffle.
 
     Returns (scheduled, n_scheduled, rejected, caches): ``rejected`` is
     ``df \\ scheduled`` in both branches (when the global cut binds, the
     eligible-minus-batch remainder is added via an anti-join against the
     small scheduled set), and ``caches`` are the frames for the caller to
-    unpersist at round end.  Row sets are identical to schedule_batch +
-    anti-join in both branches.
+    unpersist at round end.
 
-    ``want_rejected=False`` (merge-on-read frontier rounds, plans/round.py:
-    leftover rows simply stay un-tombstoned in the frontier base, so the
-    complement is never materialized): skips the ranked-intermediate caches
-    entirely — the over-budget half of the frontier is not pinned in executor
-    memory — and returns ``rejected=None``.
-
-    ``trap_threshold`` (CrawlConfig.trap_template_threshold) enables the
-    crawler-trap guard: per-(host, url-template) cells above the threshold
-    admit only ``trap_cap`` rows per round BEFORE the politeness top-k (see
-    trap_template_cap); the host census is then a rollup of the cell census,
-    so the guard adds no second corpus-wide aggregation."""
+    ``complement=False`` (merge-on-read frontier rounds, plans/round.py:
+    leftover rows simply stay un-tombstoned in the frontier base): the
+    rankings are not pinned and ``rejected`` is None.  ``trap_threshold``
+    (CrawlConfig.trap_template_threshold) enables the crawler-trap guard
+    (see trap_template_cap)."""
     order = _order_for(mode)
-    trap_dropped: DataFrame | None = None
-    trap_caches: list[DataFrame] = []
-    if trap_threshold is not None:
-        # the complement (and with it the trap-drop branches + their ranked
-        # caches) is only needed when the caller consumes ``rejected``
-        df, trap_dropped, counts, trap_caches = trap_template_cap(
-            df, trap_threshold, trap_cap, order, salt_buckets,
-            want_dropped=want_rejected,
-        )
-        # counts are PRE-cap: a host the cap pushes back under budget still
-        # takes the window path, where top-k of ≤ budget rows is the
-        # identity — row set unaffected, no second census of the corpus.
-    else:
-        counts = df.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
-    over_hosts = counts.filter(F.col("_n") > budget).select("host")
-    under = df.join(over_hosts, "host", "left_anti")
-    over = df.join(over_hosts, "host", "left_semi")
-    cols = df.columns
-
-    if not want_rejected:
-        eligible = under.unionByName(
-            _window_topk(over, budget, salt_buckets, order)
-        ).cache()
-        n_eligible = eligible.count()
-        if n_eligible <= batch_size:
-            return eligible, n_eligible, None, trap_caches + [eligible]
-        scheduled = eligible.orderBy(*order).limit(batch_size).cache()
-        scheduled.count()
-        return scheduled, batch_size, None, trap_caches + [eligible, scheduled]
-
-    if salt_buckets > 1:
-        salted = over.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
-        )
-        w1 = Window.partitionBy("host", "_salt").orderBy(*order)
-        ranked1 = salted.withColumn("_rn1", F.row_number().over(w1)).cache()
-        drop1 = ranked1.filter(F.col("_rn1") > budget).select(*cols)
-        stage2_in = ranked1.filter(F.col("_rn1") <= budget).drop("_rn1", "_salt")
-    else:
-        ranked1 = None
-        drop1 = None
-        stage2_in = over
-    w2 = Window.partitionBy("host").orderBy(*order)
-    ranked2 = stage2_in.withColumn("_rn2", F.row_number().over(w2)).cache()
-    drop2 = ranked2.filter(F.col("_rn2") > budget).select(*cols)
-    eligible_over = ranked2.filter(F.col("_rn2") <= budget).select(*cols)
-    eligible = under.unionByName(eligible_over).cache()
-    rejected = drop2 if drop1 is None else drop1.unionByName(drop2)
-    if trap_dropped is not None:
-        # trap-capped rows are part of the complement: on compact rounds the
-        # frontier base is rewritten from (complement ∪ adds), and losing
-        # them would silently delete un-fetched URLs
-        rejected = trap_dropped.unionByName(rejected)
-
-    caches = trap_caches + [
-        c for c in (ranked1, ranked2, eligible) if c is not None
-    ]
-    n_eligible = eligible.count()
+    elig, rejected, caches = eligible(
+        df, budget, order, salt_buckets, trap_threshold, trap_cap, complement
+    )
+    elig = elig.cache()
+    caches.append(elig)
+    n_eligible = elig.count()
     if n_eligible <= batch_size:
-        return eligible, n_eligible, rejected, caches
-    scheduled = eligible.orderBy(*order).limit(batch_size).cache()
+        return elig, n_eligible, rejected, caches
+    scheduled = elig.orderBy(*order).limit(batch_size).cache()
     scheduled.count()
     caches.append(scheduled)
-    rejected = rejected.unionByName(
-        eligible.join(scheduled.select("url"), "url", "left_anti")
-    )
+    if rejected is not None:
+        rejected = rejected.unionByName(
+            elig.join(scheduled.select("url"), "url", "left_anti")
+        )
     return scheduled, batch_size, rejected, caches
-
-
-def per_host_topk_by(
-    df: DataFrame,
-    budget: int,
-    salt_buckets: int,
-    order: list,
-    counts: DataFrame | None = None,
-) -> DataFrame:
-    """Per-host top-``budget`` with BUDGET CAP ELISION: a host whose row
-    count is ≤ budget keeps all its rows, so only rows of OVER-budget hosts
-    go through the window sort.  On a Zipf frontier the over-budget set is
-    the short head (at the 4M-page scaling shape: ~150 of 8000 hosts holding
-    ~half the rows), so roughly half the shuffle-sort work vanishes while
-    the row set stays exactly per_host window-top-k (for an under-budget
-    host, top-k = identity).  The host-count aggregate is map-side
-    combinable and its output is one row per host; AQE turns the anti/semi
-    probes into broadcasts when that output is small (no explicit hint — at
-    web scale with 10^8 hosts the over-budget head may itself be too large
-    to broadcast, and AQE then keeps a shuffle join, which is the correct
-    plan there).  ``counts`` lets a caller that already aggregated per-host
-    row counts (the trap cap's cell-census rollup) pass them in instead of
-    paying a second corpus-wide census."""
-    if counts is None:
-        counts = df.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
-    over_hosts = counts.filter(F.col("_n") > budget).select("host")
-    under = df.join(over_hosts, "host", "left_anti")
-    over = df.join(over_hosts, "host", "left_semi")
-    return under.unionByName(_window_topk(over, budget, salt_buckets, order))
-
-
-def _window_topk(
-    df: DataFrame, budget: int, salt_buckets: int, order: list
-) -> DataFrame:
-    if salt_buckets > 1:
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
-        )
-        w1 = Window.partitionBy("host", "_salt").orderBy(*order)
-        df = (
-            salted.withColumn("_rn1", F.row_number().over(w1))
-            .filter(F.col("_rn1") <= budget)
-            .drop("_rn1", "_salt")
-        )
-    w2 = Window.partitionBy("host").orderBy(*order)
-    return (
-        df.withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= budget)
-        .drop("_rn2")
-    )

@@ -136,7 +136,7 @@ def _checkpoint(spark: SparkSession, cat: SnapshotCatalog, round_no: int, stats:
     # number + snapshot ids), so writing it as a 1-row parquet table was a
     # whole Spark job of fixed per-round cost for nothing — nobody ever reads
     # the data, only the manifest meta (last_completed_round, rollback)
-    meta = {"round": round_no, "snapshots": snapshots, "stats": str(stats)}
+    meta = {"round": round_no, "snapshots": snapshots, "stats": stats}
     if "next_frontier_rows" in stats:
         # next round's urls_in, observed during the frontier write — saves
         # the per-round frontier.count() job (see round.py)

@@ -311,10 +311,10 @@ def run_round(
     # the politeness complement (leftover) is only materialized on compact
     # rounds, where the frontier base is rewritten in full; normal MoR rounds
     # leave un-dequeued rows in place (no tombstone) so the scheduler skips
-    # the ranked-intermediate caches entirely (want_rejected=False)
+    # the ranked-intermediate caches entirely (complement=False)
     scheduled, n_scheduled, leftover, _sched_caches = schedule_batch_counted(
         allowed, cfg.politeness_budget, cfg.batch_size, cfg.salt_buckets,
-        mode=cfg.dequeue_mode, want_rejected=compact,
+        mode=cfg.dequeue_mode, complement=compact,
         trap_threshold=cfg.trap_template_threshold,
         trap_cap=cfg.trap_admit_per_round,
     )
@@ -431,7 +431,7 @@ def run_round(
                    mode="overwrite", meta={"round": round_no})
         # the survivors count above also filled obs_links (new_cand feeds it)
         n_links = int(obs_links.get["n"])
-    elif cfg.dedup_probe:
+    else:
         # seen-side SCAN, never a seen-side shuffle: url_seen grows every
         # round (O(total URLs crawled)), so the classic left-anti shuffles
         # an ever-growing table on every round.  Instead (1) semi-probe the
@@ -452,15 +452,6 @@ def run_round(
             F.broadcast(hits), "url_hash", "left_anti"
         ).cache()
         n_new = survivors.count()
-    else:
-        new_cand = new_cand.observe(obs_links, F.count(F.lit(1)).alias("n"))
-        seen = cat.read("url_seen") or _empty(spark, schemas.URL_SEEN)
-        survivors = new_cand.join(
-            seen.select("url_hash"), "url_hash", "left_anti"
-        ).cache()
-        n_new = survivors.count()
-        # the survivors count above also filled obs_links (new_cand feeds it)
-        n_links = int(obs_links.get["n"])
     tick("dedup")
 
     # ---- metrics (per-partition lineage, north_rule) --------------------------------
@@ -733,10 +724,7 @@ def run_round(
     pending = cat.commit_many_async(deferred, unpersist=deferred_caches)
     for df in (frontier, cand, scheduled, *_dedup_caches,
                *(c for c in _sched_caches if c is not scheduled)):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        df.unpersist()
     tick("commits")
 
     if compact:

@@ -384,20 +384,19 @@ def q11(spark, sf):
     """F4: per-host politeness budget as windowed top-k (adopted semantics of
     url_frontier.py:93-99) — run through the engine's salted two-stage
     operator to prove it equals the single-stage window."""
-    from .operators.politeness import per_host_topk
+    from .operators.politeness import topk
 
     e = _t(spark, sf, "events").select(
         F.concat(F.lit("host"), (F.col("user_id") % 20).cast("string")).alias("host"),
         F.col("event_id"),
         F.col("value").alias("score"),
     )
-    ranked = per_host_topk(
+    ranked, _, _ = topk(
         e.withColumn("url", F.col("event_id").cast("string")),
-        budget=5,
+        ("host",),
+        5,
+        [F.desc("score"), F.asc("event_id")],
         salt_buckets=4,
-        host="host",
-        url="event_id",
-        score="score",
     )
     w = Window.partitionBy("host").orderBy(F.desc("score"), F.asc("event_id"))
     return (
@@ -3989,8 +3988,8 @@ def q83(spark, sf):
 # documents by identical expressions on both sides: 7 hosts; even doc_ids
 # form per-host /cal/<N> calendar-trap cells (all collapse to ONE template
 # '/cal/N'), odd doc_ids get letter-distinct paths (distinct templates).
-# Engine side: the REAL schedule_batch_counted with trap_threshold/cap —
-# the same code path plans/round.py runs; oracle: the cell census, cap
+# Engine side: the REAL scheduler (schedule_batch) with trap_threshold/cap —
+# the same eligible() path plans/round.py runs; oracle: the cell census, cap
 # rank, host budget rank and global cut replayed as SQL windows.
 # =============================================================================
 @q(

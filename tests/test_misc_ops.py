@@ -4,6 +4,7 @@ search surface (T1/T2), analytics views (A1-A3)."""
 import glob
 import os
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
@@ -236,7 +237,8 @@ def test_schedule_batch_counted_equivalence(spark):
     """schedule_batch_counted returns the identical row set as schedule_batch
     in BOTH branches (cap binds / cap slack — the serial global sort never
     runs in the slack branch), and its ``rejected`` complement is exactly
-    df minus scheduled in both."""
+    df minus scheduled in both.  Both schedulers are also pinned to an
+    independent single-stage window reference, trap guard on and off."""
     from adavnceseo_crawler_spark.operators.politeness import (
         schedule_batch,
         schedule_batch_counted,
@@ -264,6 +266,64 @@ def test_schedule_batch_counted_equivalence(spark):
         assert rejected.columns == df.columns
         for c in caches:
             c.unpersist()
+
+    # independent reference: single-stage windows (trap cell cap, then the
+    # per-host budget) and a plain global cut, on a frame with trap cells
+    # (/cal/<N> on every host, /tag/<N> on two) beside letter-distinct pages
+    # and one under-budget host
+    rows = [
+        (f"https://h{h}.com/cal/{1000 + i}", f"h{h}", float((i * 7 + h) % 11), i)
+        for h in range(4) for i in range(12)
+    ] + [
+        (f"https://h{h}.com/tag/{i}", f"h{h}", float((i * 3 + h) % 10), 50 + i)
+        for h in range(2) for i in range(9)
+    ] + [
+        (f"https://h{h}.com/page-{c}", f"h{h}", float((j * 5 + h) % 9), 100 + j)
+        for h in range(4) for j, c in enumerate("abcdef")
+    ] + [(f"https://h4.com/page-{c}", "h4", 3.0, 200) for c in "xyz"]
+    df = spark.createDataFrame(rows, "url string, host string, score double, seq long")
+    all_urls = {r["url"] for r in df.collect()}
+    order = [F.desc("score"), F.asc("url")]
+
+    def reference(trap, batch_size):
+        cand = df
+        if trap is not None:
+            threshold, cap = trap
+            cell = Window.partitionBy(
+                "host",
+                F.when(F.col("url").contains("/cal/"), "cal")
+                .when(F.col("url").contains("/tag/"), "tag")
+                .otherwise(F.col("url")),
+            )
+            cand = (
+                cand.withColumn("_cn", F.count(F.lit(1)).over(cell))
+                .withColumn("_rc", F.row_number().over(cell.orderBy(*order)))
+                .filter((F.col("_cn") <= threshold) | (F.col("_rc") <= cap))
+            )
+        w = Window.partitionBy("host").orderBy(*order)
+        top = cand.withColumn("_rh", F.row_number().over(w)).filter(F.col("_rh") <= 5)
+        return {r["url"] for r in top.orderBy(*order).limit(batch_size).collect()}
+
+    for trap in (None, (8, 2)):
+        kw = {} if trap is None else {"trap_threshold": trap[0], "trap_cap": trap[1]}
+        for batch_size in (7, 1000):  # binds / cannot bind
+            want = reference(trap, batch_size)
+            lazy = schedule_batch(df, budget=5, batch_size=batch_size,
+                                  salt_buckets=2, **kw)
+            assert {r["url"] for r in lazy.collect()} == want
+            got_df, n, rejected, caches = schedule_batch_counted(
+                df, budget=5, batch_size=batch_size, salt_buckets=2,
+                complement=True, **kw
+            )
+            got = {r["url"] for r in got_df.collect()}
+            rej_rows = rejected.collect()
+            rej = {r["url"] for r in rej_rows}
+            assert got == want and n == len(want)
+            assert got | rej == all_urls
+            assert not got & rej and len(rej_rows) == len(rej)
+            assert rejected.columns == df.columns
+            for c in caches:
+                c.unpersist()
 
 
 def test_en_stem_column_matches_python_mirror(spark):

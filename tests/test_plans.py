@@ -4,7 +4,7 @@ parquet filter pushdown, salted top-k equivalence under Zipf skew."""
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from adavnceseo_crawler_spark.operators.politeness import per_host_topk
+from adavnceseo_crawler_spark.operators.politeness import topk
 from adavnceseo_crawler_spark.operators.robotsops import apply_robots
 from adavnceseo_crawler_spark.synth import gen_robots
 
@@ -53,7 +53,9 @@ def test_salted_topk_equals_single_stage_under_skew(spark):
         .cache()
     )
     budget = 7
-    salted = per_host_topk(df, budget, salt_buckets=8)
+    salted, _, _ = topk(
+        df, ("host",), budget, [F.desc("score"), F.asc("url")], salt_buckets=8
+    )
     w = Window.partitionBy("host").orderBy(F.desc("score"), F.asc("url"))
     single = (
         df.withColumn("rn", F.row_number().over(w))
@@ -267,7 +269,7 @@ def test_frontier_base_shuffles_once_through_tombstone_and_enrich(spark, tmp_pat
 
 
 def test_dedup_probe_never_shuffles_seen(spark, tmp_path):
-    """The exact-dedup probe path (round.py, cfg.dedup_probe): url_seen must
+    """The exact-dedup probe path (round.py, use_bloom=False): url_seen must
     be SCANNED and probed via broadcast, never shuffled — its per-round cost
     would otherwise grow O(total URLs crawled).  Pins both halves: the semi
     probe against the seen scan and the anti-join back are BroadcastHashJoins,

@@ -100,3 +100,17 @@ def test_rollback_drops_tables_absent_from_checkpoint(spark, tmp_path):
     loop.run_crawl(spark, cat, CFG, max_rounds=3)
     pages = cat.read("pages").select("url")
     assert pages.count() == pages.distinct().count()
+
+
+def test_checkpoint_stats_are_data(spark, tmp_path):
+    """The checkpoint manifest stores the round stats as JSON data (not a
+    repr string), so per-stage walls are readable after a restart."""
+    root = str(tmp_path / "c")
+    loop.run_crawl(spark, _bootstrap(spark, root), CFG, max_rounds=2)
+    # a fresh catalog reads the manifest back from disk
+    meta = SnapshotCatalog(spark, root).latest("checkpoint").meta
+    assert meta["round"] == 1
+    times = meta["stats"]["times"]
+    assert isinstance(times, dict)
+    assert {"schedule", "dedup", "commits"} <= times.keys(), times
+    assert isinstance(meta["stats"]["commit_walls"], dict)
