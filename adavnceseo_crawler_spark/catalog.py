@@ -26,6 +26,8 @@ import json
 import os
 import shutil
 import tempfile
+import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Any
 
@@ -81,14 +83,14 @@ class SnapshotCatalog:
         return snaps[-1] if snaps else None
 
     # -- commit ----------------------------------------------------------------
-    def commit(
-        self,
-        table: str,
-        df: DataFrame,
-        mode: str = "overwrite",
-        meta: dict[str, Any] | None = None,
-    ) -> Snapshot:
+    def _stage(
+        self, table: str, df: DataFrame, mode: str, meta: dict[str, Any] | None
+    ) -> tuple[Snapshot, float]:
+        """Write ``df`` to the table's next ``snap-NNNNNN`` dir and return the
+        snapshot it WOULD publish, plus the data-write wall seconds.  Nothing
+        is visible until ``_write_manifest`` runs on the returned snapshot."""
         assert mode in ("overwrite", "append")
+        t0 = time.monotonic()
         prev = self.latest(table)
         sid = (prev.snapshot_id + 1) if prev else 0
         data_dir = os.path.join(self._tdir(table), f"snap-{sid:06d}")
@@ -97,13 +99,21 @@ class SnapshotCatalog:
             data_dir
         ]
         snap = Snapshot(sid, mode, dirs, meta or {})
+        return snap, round(time.monotonic() - t0, 3)
+
+    def commit(
+        self,
+        table: str,
+        df: DataFrame,
+        mode: str = "overwrite",
+        meta: dict[str, Any] | None = None,
+    ) -> Snapshot:
+        snap, _ = self._stage(table, df, mode, meta)
         self._write_manifest(table, snap)
         return snap
 
     def commit_many(
-        self,
-        commits: list[tuple[str, DataFrame, str, dict[str, Any] | None]],
-        max_workers: int | None = None,
+        self, commits: list[tuple[str, DataFrame, str, dict[str, Any] | None]]
     ) -> dict[str, float]:
         """Multi-table transaction (Iceberg's multi-table commit shape): all
         data dirs are written first as CONCURRENT Spark jobs, then every
@@ -113,32 +123,7 @@ class SnapshotCatalog:
         cross-table point of consistency remains the checkpoint manifest, as
         before.)  Returns per-table data-write wall seconds for the scaling
         decomposition."""
-        import time
-        from concurrent.futures import ThreadPoolExecutor
-
-        staged: dict[str, Snapshot] = {}
-        walls: dict[str, float] = {}
-
-        def _write(c) -> None:
-            table, df, mode, meta = c
-            t0 = time.monotonic()
-            prev = self.latest(table)
-            sid = (prev.snapshot_id + 1) if prev else 0
-            data_dir = os.path.join(self._tdir(table), f"snap-{sid:06d}")
-            df.write.mode("overwrite").parquet(data_dir)
-            dirs = (
-                [data_dir]
-                if mode == "overwrite"
-                else (prev.dirs if prev else []) + [data_dir]
-            )
-            staged[table] = Snapshot(sid, mode, dirs, meta or {})
-            walls[table] = round(time.monotonic() - t0, 3)
-
-        with ThreadPoolExecutor(max_workers=max_workers or len(commits)) as pool:
-            list(pool.map(_write, commits))
-        for table, snap in staged.items():  # μs each: one rename per table
-            self._write_manifest(table, snap)
-        return walls
+        return self.commit_settle(self.commit_many_async(commits))
 
     def commit_many_async(
         self,
@@ -153,37 +138,16 @@ class SnapshotCatalog:
         overwrite-mode data write).
 
         Used by plans/round.py for the tables the next round does not read
-        until its dedup stage (crawl_log, pages, url_seen, parsed,
-        round_metrics): their writes overlap the next round's schedule stage,
-        which is driver-latency-bound and leaves executor cores idle — the
-        commit barrier's core-hungry jobs fill exactly that gap.  Snapshot
-        ids are assigned here (the tables are disjoint from any concurrently
-        committed sync table), so the eventual checkpoint meta is already
-        determined.  ``unpersist``: cached frames the writes read; released
-        at settle."""
-        import time
-        from concurrent.futures import ThreadPoolExecutor
-
-        staged: dict[str, Snapshot] = {}
-        walls: dict[str, float] = {}
-
-        def _write(c) -> None:
-            table, df, mode, meta = c
-            t0 = time.monotonic()
-            prev = self.latest(table)
-            sid = (prev.snapshot_id + 1) if prev else 0
-            data_dir = os.path.join(self._tdir(table), f"snap-{sid:06d}")
-            df.write.mode("overwrite").parquet(data_dir)
-            dirs = (
-                [data_dir]
-                if mode == "overwrite"
-                else (prev.dirs if prev else []) + [data_dir]
-            )
-            staged[table] = Snapshot(sid, mode, dirs, meta or {})
-            walls[table] = round(time.monotonic() - t0, 3)
-
+        until its dedup stage (crawl_log, pages, url_seen, bloom_shards,
+        parsed, round_metrics): their writes overlap the next round's
+        schedule stage, which is driver-latency-bound and leaves executor
+        cores idle — the commit barrier's core-hungry jobs fill exactly that
+        gap.  The tables are disjoint from any concurrently committed sync
+        table, so the snapshot ids the writes pick (and with them the
+        eventual checkpoint meta) are already determined.  ``unpersist``:
+        cached frames the writes read; released at settle."""
         pool = ThreadPoolExecutor(max_workers=len(commits))
-        futures = [pool.submit(_write, c) for c in commits]
+        futures = [pool.submit(self._stage, *c) for c in commits]
         # every task is already running (max_workers == len(commits)), so the
         # pool can stop accepting work now; its threads then exit as tasks
         # finish even if settle is never reached (exception mid-round) — no
@@ -192,27 +156,27 @@ class SnapshotCatalog:
         self._unsettled += 1
         return {
             "pool": pool,
+            "tables": [c[0] for c in commits],
             "futures": futures,
-            "staged": staged,
-            "walls": walls,
             "unpersist": list(unpersist or []),
         }
 
     def commit_settle(self, handle: dict) -> dict[str, float]:
         """Barrier for a commit_many_async handle: wait for the data writes,
         make every staged snapshot visible (one manifest rename each), then
-        release the caches the writes were reading.  Must run before anything
-        reads the deferred tables — plans/round.py places it at the start of
-        the next round's dedup stage (the first url_seen read)."""
+        release the caches the writes were reading.  Returns per-table
+        data-write wall seconds.  Must run before anything reads the deferred
+        tables — plans/round.py places it at the start of the next round's
+        dedup stage (the first url_seen / bloom_shards read)."""
         try:
             try:
-                for f in handle["futures"]:
-                    f.result()  # re-raises a failed write before manifests land
+                # re-raises a failed write before any manifest lands
+                staged = [f.result() for f in handle["futures"]]
             finally:
                 # join writer threads even when a write failed, so no thread
                 # outlives the (aborted) settle; either way the handle is spent
                 handle["pool"].shutdown(wait=True)
-            for table, snap in handle["staged"].items():
+            for table, (snap, _) in zip(handle["tables"], staged):
                 self._write_manifest(table, snap)
         finally:
             # Decrement only AFTER the staged manifests are written (or the
@@ -222,11 +186,8 @@ class SnapshotCatalog:
             # fully-written staged dirs the manifests are about to point at.
             self._unsettled = max(0, self._unsettled - 1)
         for df in handle["unpersist"]:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        return handle["walls"]
+            df.unpersist()
+        return {table: wall for table, (_, wall) in zip(handle["tables"], staged)}
 
     def commit_manifest_only(
         self, table: str, meta: dict[str, Any] | None = None
@@ -234,11 +195,7 @@ class SnapshotCatalog:
         """Commit a data-less snapshot carrying only metadata — no Spark job.
         Used for the per-round checkpoint, whose payload lives entirely in
         the manifest's ``meta`` (round number + table snapshot ids)."""
-        prev = self.latest(table)
-        sid = (prev.snapshot_id + 1) if prev else 0
-        snap = Snapshot(sid, "overwrite", [], meta or {})
-        self._write_manifest(table, snap)
-        return snap
+        return self.register_external(table, [], meta)
 
     def register_external(
         self, table: str, dirs: list[str], meta: dict[str, Any] | None = None

@@ -99,12 +99,15 @@ def empty_shards(spark, params: BloomParams, round_no: int = 0) -> DataFrame:
 
 def filter_and_update(
     candidates: DataFrame, shards: DataFrame, params: BloomParams
-) -> tuple[DataFrame, DataFrame]:
-    """(survivors, updated_shards) in one cogrouped pass.
+) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
+    """(survivors, updated_shards, caches) in one cogrouped pass.
 
     ``candidates`` needs columns url, url_hash, host, depth.  Buckets with no
     candidates re-emit their shard unchanged (an overwrite commit must carry
-    the full shard set).
+    the full shard set).  Both frames are projections of ONE cached pass
+    result, so the survivors and the shard write never rerun the UDF;
+    ``caches`` holds that result for the caller to unpersist once both are
+    consumed.
     """
     k, m = params.k_hashes, params.m_bits
     nbytes = (m + 7) // 8
@@ -144,4 +147,4 @@ def filter_and_update(
     new_shards = out.filter(F.col("url").isNull()).select(
         "bucket", "bitset", "n_items"
     )
-    return survivors, new_shards
+    return survivors, new_shards, [out]

@@ -80,13 +80,17 @@ def bootstrap(
         )
         shards0 = bloomops.empty_shards(spark, params)
         seeds_cand = cat.read("frontier").select("url", "url_hash", "host", "depth")
-        _, shards1 = bloomops.filter_and_update(seeds_cand, shards0.select("bucket", "bitset", "n_items"), params)
+        _, shards1, caches = bloomops.filter_and_update(
+            seeds_cand, shards0.select("bucket", "bitset", "n_items"), params
+        )
         cat.commit(
             "bloom_shards",
             shards1.withColumn("round", F.lit(0)),
             mode="overwrite",
             meta={"round": 0},
         )
+        for df in caches:
+            df.unpersist()
     cat.commit_empty("url_metadata", schemas.URL_METADATA)
     cat.commit_empty("crawl_log", schemas.CRAWL_LOG)
     cat.commit_empty("domain_stats", schemas.DOMAIN_STATS)
@@ -137,14 +141,6 @@ def _checkpoint(spark: SparkSession, cat: SnapshotCatalog, round_no: int, stats:
     # whole Spark job of fixed per-round cost for nothing — nobody ever reads
     # the data, only the manifest meta (last_completed_round, rollback)
     meta = {"round": round_no, "snapshots": snapshots, "stats": stats}
-    if "next_frontier_rows" in stats:
-        # next round's urls_in, observed during the frontier write — saves
-        # the per-round frontier.count() job (see round.py)
-        meta["frontier_rows"] = int(stats["next_frontier_rows"])
-    if stats.get("next_consumed_rows") is not None:
-        # live tombstone count for the merge-on-read frontier read: drives
-        # the broadcast-vs-shuffle choice of the consumed anti-join
-        meta["consumed_rows"] = int(stats["next_consumed_rows"])
     cat.commit_manifest_only("checkpoint", meta=meta)
 
 
@@ -189,11 +185,14 @@ def run_crawl(
     max_rounds = max_rounds if max_rounds is not None else cfg.max_rounds
     rollback_to_checkpoint(spark, cat)
     start = last_completed_round(cat) + 1
-    ckpt = cat.latest("checkpoint")
-    hint = int(ckpt.meta["frontier_rows"]) if "frontier_rows" in ckpt.meta else None
-    cons_hint = (
-        int(ckpt.meta["consumed_rows"]) if "consumed_rows" in ckpt.meta else None
-    )
+    # resume hints from the checkpointed stats: next_frontier_rows is the
+    # next round's urls_in, observed during the frontier write (saves the
+    # per-round frontier.count() job, see round.py); next_consumed_rows is
+    # the live tombstone count that drives the broadcast-vs-shuffle choice
+    # of the merge-on-read frontier read's consumed anti-join
+    ckpt_stats = cat.latest("checkpoint").meta.get("stats", {})
+    hint = ckpt_stats.get("next_frontier_rows")
+    cons_hint = ckpt_stats.get("next_consumed_rows")
     stats = []
     # write-behind pipeline, one round deep: round r's bulky appends flush
     # while round r+1's schedule stage runs; round r's CHECKPOINT is written

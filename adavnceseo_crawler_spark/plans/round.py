@@ -210,6 +210,7 @@ def run_round(
     # checkpoints)
     urls_in = urls_in_hint if urls_in_hint is not None else frontier.count()
     if urls_in == 0:
+        frontier.unpersist()
         return {"round": round_no, "scheduled": 0, "fetched": 0, "done": True}
 
     meta = cat.read("url_metadata") or _empty(spark, schemas.URL_METADATA)
@@ -419,16 +420,17 @@ def run_round(
         on_barrier()
         tick("settle_prev")
 
-    _dedup_caches: list = []
+    # the dedup stage's caches back the url_seen / bloom_shards writes, so
+    # they ride the write-behind group and are released at its settle
     if cfg.use_bloom:
         new_cand = new_cand.observe(obs_links, F.count(F.lit(1)).alias("n"))
         params = bloomops.BloomParams(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_buckets)
         shards = cat.read("bloom_shards")
-        survivors, new_shards = bloomops.filter_and_update(new_cand, shards, params)
-        survivors = survivors.cache()
+        survivors, new_shards, _dedup_caches = bloomops.filter_and_update(
+            new_cand, shards, params
+        )
+        # fills the pass cache both survivors and new_shards project from
         n_new = survivors.count()
-        cat.commit("bloom_shards", new_shards.withColumn("round", F.lit(round_no + 1)),
-                   mode="overwrite", meta={"round": round_no})
         # the survivors count above also filled obs_links (new_cand feeds it)
         n_links = int(obs_links.get["n"])
     else:
@@ -443,7 +445,6 @@ def run_round(
         # documented scale path (config.py).
         seen = cat.read("url_seen") or _empty(spark, schemas.URL_SEEN)
         new_cand = new_cand.cache()
-        _dedup_caches.append(new_cand)
         n_links = new_cand.count()
         hits = seen.select("url_hash").join(
             F.broadcast(new_cand.select("url_hash")), "url_hash", "left_semi"
@@ -452,6 +453,7 @@ def run_round(
             F.broadcast(hits), "url_hash", "left_anti"
         ).cache()
         n_new = survivors.count()
+        _dedup_caches = [new_cand, survivors]
     tick("dedup")
 
     # ---- metrics (per-partition lineage, north_rule) --------------------------------
@@ -620,11 +622,11 @@ def run_round(
     # two-group commit pipeline: the SYNC group is exactly what the next
     # round reads before its dedup stage (frontier state, url_metadata,
     # domain_stats — all O(delta) under merge-on-read); the DEFERRED group
-    # (crawl_log, pages, url_seen, parsed, round_metrics) is handed to
-    # commit_many_async and flushes while the next round's schedule stage
-    # runs — its driver-latency waits leave cores idle, which the deferred
-    # write jobs fill.  Visibility still flips atomically at settle, before
-    # the first deferred-table read.
+    # (crawl_log, pages, url_seen, bloom_shards, parsed, round_metrics) is
+    # handed to commit_many_async and flushes while the next round's schedule
+    # stage runs — its driver-latency waits leave cores idle, which the
+    # deferred write jobs fill.  Visibility still flips atomically at settle,
+    # before the first deferred-table read.
     deferred: list[tuple] = [
         ("crawl_log", new_log, "append", m_this),
         ("pages", pages_out, "append", m_this),
@@ -633,6 +635,11 @@ def run_round(
          "append", m_this),
         ("round_metrics", metrics_df, "append", m_this),
     ]
+    if cfg.use_bloom:
+        deferred.append(
+            ("bloom_shards", new_shards.withColumn("round", F.lit(round_no + 1)),
+             "overwrite", m_this)
+        )
     if cfg.store_parsed:
         deferred.append(
             ("parsed", parsed.select([f.name for f in schemas.PARSED.fields]),
@@ -713,16 +720,17 @@ def run_round(
     commit_walls = cat.commit_many(commits)
     # hand the bulky appends to the write-behind pipeline.  Caches split two
     # ways: frames whose lineage backs a deferred write (parsed → pages,
-    # new_log → crawl_log, survivors → url_seen, raw_fetch under parsed)
-    # stay pinned until settle; everything upstream of the SYNC group only
-    # (frontier, cand, scheduled + scheduler intermediates) is released
-    # right here — commit_many already consumed them, and keeping full-HTML
-    # frames pinned an extra round doubles peak cache footprint for nothing.
-    deferred_caches = [parsed, new_log, survivors]
+    # new_log → crawl_log, the dedup caches → url_seen / bloom_shards,
+    # raw_fetch under parsed) stay pinned until settle; everything upstream
+    # of the SYNC group only (frontier, cand, scheduled + scheduler
+    # intermediates) is released right here — commit_many already consumed
+    # them, and keeping full-HTML frames pinned an extra round doubles peak
+    # cache footprint for nothing.
+    deferred_caches = [parsed, new_log, *_dedup_caches]
     if raw_fetch is not None:
         deferred_caches.append(raw_fetch)
     pending = cat.commit_many_async(deferred, unpersist=deferred_caches)
-    for df in (frontier, cand, scheduled, *_dedup_caches,
+    for df in (frontier, cand, scheduled,
                *(c for c in _sched_caches if c is not scheduled)):
         df.unpersist()
     tick("commits")

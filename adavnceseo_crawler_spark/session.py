@@ -14,10 +14,12 @@ import os
 # ``from __future__ import annotations`` those hints are STRINGS resolved
 # against THIS module's globals at decoration time — a function-local import
 # leaves them unresolvable and pandas_udf raises UNSUPPORTED_SIGNATURE
-# (which the warm-up's best-effort except silently swallowed, disabling the
-# whole python-worker warm tail)
 import pandas as pd
 from pyspark.sql import SparkSession
+
+# directory that holds the package: python workers get it on their
+# PYTHONPATH, so their imports never depend on the driver's working directory
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -57,12 +59,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (_PACKAGE_ROOT, conf.get(key)) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("SPARK_GRAFT_WARM_START", "1") != "0":
-        _warm_start(spark)
+    _warm_start(spark)
     return spark
 
 
@@ -77,8 +81,8 @@ def _warm_start(spark: SparkSession) -> None:
     a 1000-row synthetic parquet roundtrip in a temp dir, one shuffle
     aggregate into the noop sink, and one trivial pandas UDF across all
     cores (the plans/loop.py prewarm_python_workers pattern, hoisted to
-    session creation so analytic sessions get it too).  Disable with
-    SPARK_GRAFT_WARM_START=0."""
+    session creation so analytic sessions get it too).  A failing pass
+    raises: it would fail the same way in the first real query."""
     if getattr(spark, "_graft_warmed", False):
         return
     spark._graft_warmed = True
@@ -137,7 +141,5 @@ def _warm_start(spark: SparkSession) -> None:
         extract_features(
             synth_media_png(spark, n=4), decode="real"
         ).write.mode("overwrite").format("noop").save()
-    except Exception:
-        pass  # warm-up is best-effort; never block session creation
     finally:
         shutil.rmtree(d, ignore_errors=True)

@@ -1,6 +1,8 @@
 """Checkpoint/resume (north_rule): kill after round k, resume, and the
 remaining rounds are byte-equal to an uninterrupted run."""
 
+from dataclasses import replace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,10 +18,10 @@ N_PAGES, N_HOSTS = 300, 8
 CFG = CrawlConfig(politeness_budget=3, batch_size=30, max_rounds=6, compact_every=2)
 
 
-def _bootstrap(spark, root):
+def _bootstrap(spark, root, cfg=CFG):
     cat = SnapshotCatalog(spark, root)
     loop.bootstrap(
-        spark, cat, CFG,
+        spark, cat, cfg,
         synth.gen_seeds(spark, N_PAGES, N_HOSTS),
         synth.gen_pages(spark, N_PAGES, N_HOSTS, partitions=8),
         synth.gen_robots(spark, N_HOSTS),
@@ -44,18 +46,21 @@ def _snapshot_state(cat):
     return rows, frontier, seen, texts
 
 
-def test_kill_resume_identical(spark, tmp_path):
+@pytest.mark.parametrize("use_bloom", [False, True])
+def test_kill_resume_identical(spark, tmp_path, use_bloom):
+    # both URL-seen paths: bloom_shards rides the write-behind group
+    cfg = replace(CFG, use_bloom=use_bloom, bloom_capacity=100_000, bloom_buckets=8)
     # uninterrupted run
-    cat_a = _bootstrap(spark, str(tmp_path / "a"))
-    loop.run_crawl(spark, cat_a, CFG, max_rounds=6)
+    cat_a = _bootstrap(spark, str(tmp_path / "a"), cfg)
+    loop.run_crawl(spark, cat_a, cfg, max_rounds=6)
 
     # interrupted run: 3 rounds, "kill", fresh loop resumes from checkpoint
-    cat_b = _bootstrap(spark, str(tmp_path / "b"))
-    loop.run_crawl(spark, cat_b, CFG, max_rounds=3)
+    cat_b = _bootstrap(spark, str(tmp_path / "b"), cfg)
+    loop.run_crawl(spark, cat_b, cfg, max_rounds=3)
     assert loop.last_completed_round(cat_b) == 2
     # resume (a new SnapshotCatalog instance = a new process's view)
     cat_b2 = SnapshotCatalog(spark, str(tmp_path / "b"))
-    loop.run_crawl(spark, cat_b2, CFG, max_rounds=6)
+    loop.run_crawl(spark, cat_b2, cfg, max_rounds=6)
     assert loop.last_completed_round(cat_b2) == 5
 
     assert _snapshot_state(cat_a) == _snapshot_state(cat_b2)
@@ -104,11 +109,15 @@ def test_rollback_drops_tables_absent_from_checkpoint(spark, tmp_path):
 
 def test_checkpoint_stats_are_data(spark, tmp_path):
     """The checkpoint manifest stores the round stats as JSON data (not a
-    repr string), so per-stage walls are readable after a restart."""
+    repr string), so per-stage walls are readable after a restart, and the
+    resume hints are read from those stats, not from copies beside them."""
     root = str(tmp_path / "c")
     loop.run_crawl(spark, _bootstrap(spark, root), CFG, max_rounds=2)
     # a fresh catalog reads the manifest back from disk
-    meta = SnapshotCatalog(spark, root).latest("checkpoint").meta
+    cat = SnapshotCatalog(spark, root)
+    meta = cat.latest("checkpoint").meta
+    assert meta["stats"]["next_frontier_rows"] == read_frontier(cat).count()
+    assert "frontier_rows" not in meta
     assert meta["round"] == 1
     times = meta["stats"]["times"]
     assert isinstance(times, dict)
