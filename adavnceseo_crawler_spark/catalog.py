@@ -194,7 +194,8 @@ class SnapshotCatalog:
     ) -> Snapshot:
         """Commit a data-less snapshot carrying only metadata — no Spark job.
         Used for the per-round checkpoint, whose payload lives entirely in
-        the manifest's ``meta`` (round number + table snapshot ids)."""
+        the manifest's ``meta`` (round number + table snapshot ids), and to
+        empty a table: ``read`` returns None for it."""
         return self.register_external(table, [], meta)
 
     def register_external(
@@ -208,20 +209,6 @@ class SnapshotCatalog:
         snap = Snapshot(sid, "overwrite", list(dirs), meta or {})
         self._write_manifest(table, snap)
         return snap
-
-    def commit_empty(self, table: str, schema, meta: dict[str, Any] | None = None):
-        """Commit an empty overwrite snapshot with the given schema.  The
-        manifest carries ``empty: True`` so readers can skip whole plan
-        branches without a row-count job (see ``is_bootstrap_empty``)."""
-        df = self.spark.createDataFrame([], schema)
-        return self.commit(table, df, mode="overwrite", meta={**(meta or {}), "empty": True})
-
-    def is_bootstrap_empty(self, table: str) -> bool:
-        """True iff the table's LATEST snapshot is still a commit_empty one —
-        a pure manifest read (no Spark job).  Any later append/overwrite
-        clears the flag because its manifest meta lacks ``empty``."""
-        snap = self.latest(table)
-        return snap is not None and bool(snap.meta.get("empty"))
 
     def _write_manifest(self, table: str, snap: Snapshot) -> None:
         mandir = self._mandir(table)
@@ -242,6 +229,8 @@ class SnapshotCatalog:
 
     # -- read ------------------------------------------------------------------
     def read(self, table: str, snapshot_id: int | None = None) -> DataFrame | None:
+        """The snapshot's rows, or None for an empty table: one with no
+        snapshot yet or whose snapshot lists no data dir (manifest-only)."""
         if snapshot_id is None:
             snap = self.latest(table)
         else:

@@ -1,7 +1,8 @@
 """Multi-round crawl loop with checkpoint/resume (M3, north_rule).
 
-``bootstrap`` seeds the catalog (web, robots, frontier round 0, empty state
-tables); ``run_crawl`` executes rounds until the frontier drains or
+``bootstrap`` seeds the catalog (web, robots, frontier and url_seen round 0,
+plus the Bloom shards; the other state tables stay absent until round 0
+writes them); ``run_crawl`` executes rounds until the frontier drains or
 ``max_rounds`` is hit, committing a checkpoint manifest after each round.
 A killed job resumes from the last complete checkpoint: every table the next
 round reads was committed before the checkpoint, and rounds are deterministic
@@ -15,7 +16,6 @@ in-process RAM (url_frontier.py:24) and Redis is flushed on startup
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,9 +63,7 @@ def bootstrap(
         # big immutable web inputs are registered in place (Iceberg
         # add_files), not rewritten — bench runs share one generated copy
         cat.register_external("web", [web_external_dir])
-    else:
-        if web is None:  # http fetch mode needs no synthetic web
-            web = spark.createDataFrame([], schemas.PAGES)
+    elif web is not None:  # http fetch mode reads no web table
         cat.commit("web", web, mode="overwrite")
     cat.commit("robots", robots, mode="overwrite")
     frontier0 = seed_frontier(seeds)
@@ -91,30 +89,7 @@ def bootstrap(
         )
         for df in caches:
             df.unpersist()
-    cat.commit_empty("url_metadata", schemas.URL_METADATA)
-    cat.commit_empty("crawl_log", schemas.CRAWL_LOG)
-    cat.commit_empty("domain_stats", schemas.DOMAIN_STATS)
-    cat.commit_empty("frontier_consumed", schemas.FRONTIER_CONSUMED)
     _checkpoint(spark, cat, -1, {"next_consumed_rows": 0})
-    prewarm_python_workers(spark)
-
-
-def prewarm_python_workers(spark: SparkSession) -> None:
-    """Spawn the Arrow python-worker pool once at setup: the first pandas
-    UDF of round 0 otherwise pays daemon + per-core worker spinup inside
-    the crawl (the dominant round-0 cold cost in the scaling runs —
-    round-0 N16/N4 ratio 2.78 vs 3.13 steady-state).  One trivial UDF job
-    across all cores; workers are reused for the whole session
-    (spark.python.worker.reuse defaults true)."""
-    cores = spark.sparkContext.defaultParallelism
-
-    @F.pandas_udf("long")
-    def _noop(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(cores * 4, numPartitions=cores).select(
-        _noop(F.col("id"))
-    ).count()
 
 
 TABLES = (

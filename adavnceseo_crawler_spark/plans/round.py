@@ -213,8 +213,8 @@ def run_round(
         frontier.unpersist()
         return {"round": round_no, "scheduled": 0, "fetched": 0, "done": True}
 
-    meta = cat.read("url_metadata") or _empty(spark, schemas.URL_METADATA)
-    dstats = cat.read("domain_stats") or _empty(spark, schemas.DOMAIN_STATS)
+    meta = cat.read("url_metadata")
+    dstats = cat.read("domain_stats")
     robots = cat.read("robots") or _empty(spark, schemas.ROBOTS)
     web = cat.read("web") if cfg.fetch_mode == "synthetic" else None
 
@@ -228,10 +228,10 @@ def run_round(
     # join had.  Cost stays O(|distinct urls|), never a growing-history
     # rescan (bounded by base + compact_every deltas).
     # bootstrap fast path: on the very first round url_metadata/domain_stats
-    # are still their commit_empty snapshots (manifest-flagged, no row-count
-    # job) — joining an EMPTY table still plans a full aggregate + exchange
-    # of the frontier side, so substitute the joins' null columns directly
-    if cat.is_bootstrap_empty("url_metadata"):
+    # are still absent (read returned None, no row-count job) — joining an
+    # EMPTY table still plans a full aggregate + exchange of the frontier
+    # side, so substitute the joins' null columns directly
+    if meta is None:
         cand = frontier.withColumn(
             "last_crawled", F.lit(None).cast("timestamp")
         )
@@ -242,7 +242,7 @@ def run_round(
             .agg(F.max("last_crawled").alias("last_crawled"))
         )
         cand = frontier.join(meta_latest, "url_hash", "left")
-    if cat.is_bootstrap_empty("domain_stats"):
+    if dstats is None:
         for _c, _t in (
             ("domain_score", "double"), ("success_count", "long"),
             ("total_count", "long"), ("avg_crawl_time", "double"),
@@ -599,9 +599,10 @@ def run_round(
         )
     )
     # domain_stats (A9 adopted aggregate) maintained incrementally — merge
-    # this round's per-host sums; no rescan of the ever-growing crawl_log
+    # this round's per-host sums; no rescan of the ever-growing crawl_log.
+    # Round 0 merges into an empty frame (0.0 sums for an all-failed host)
     dstats_new = scoring.domain_stats_update(
-        dstats if cat.exists("domain_stats") else None, new_log
+        dstats or _empty(spark, schemas.DOMAIN_STATS), new_log
     ).withColumn("content_type_count", F.lit(None).cast("int"))
 
     # the table commits form ONE multi-table transaction (catalog.commit_many):
@@ -689,13 +690,12 @@ def run_round(
             .observe(obs_front, F.count(F.lit(1)).alias("n"))
         )
         meta_compacted = resolve_latest(
-            meta.unionByName(upd), "url_hash", "last_crawled"
+            (meta or _empty(spark, schemas.URL_METADATA)).unionByName(upd),
+            "url_hash", "last_crawled",
         )
         commits += [
             ("url_metadata", meta_compacted, "overwrite", m_this),
             ("frontier", next_frontier, "overwrite", m_next),
-            ("frontier_consumed", _empty(spark, schemas.FRONTIER_CONSUMED),
-             "overwrite", m_next),
         ]
     else:
         # ---- normal round: O(delta) appends only -----------------------------
@@ -718,6 +718,8 @@ def run_round(
             ("frontier_consumed", consumed, "append", m_next),
         ]
     commit_walls = cat.commit_many(commits)
+    if compact:  # the compacted base has no tombstones: empty, no write job
+        cat.commit_manifest_only("frontier_consumed", m_next)
     # hand the bulky appends to the write-behind pipeline.  Caches split two
     # ways: frames whose lineage backs a deferred write (parsed → pages,
     # new_log → crawl_log, the dedup caches → url_seen / bloom_shards,

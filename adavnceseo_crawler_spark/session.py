@@ -39,6 +39,8 @@ def get_spark(
             shuffle_partitions = 32 if inner == "*" else max(8, int(inner))
         else:
             shuffle_partitions = 200
+    # default driver heap: a quarter of physical memory, so it fits the host
+    ram_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -57,7 +59,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{ram_mib // 4}m"),
+        )
     )
     conf = dict(extra_conf or {})
     key = "spark.executorEnv.PYTHONPATH"
@@ -79,10 +84,11 @@ def _warm_start(spark: SparkSession) -> None:
     query happens to run first (local[32], sf0.1: the first aggregate query
     drops 5.2 s → 1.0 s once these paths are hot).  Touches NO input data:
     a 1000-row synthetic parquet roundtrip in a temp dir, one shuffle
-    aggregate into the noop sink, and one trivial pandas UDF across all
-    cores (the plans/loop.py prewarm_python_workers pattern, hoisted to
-    session creation so analytic sessions get it too).  A failing pass
-    raises: it would fail the same way in the first real query."""
+    aggregate into the noop sink, one trivial pandas UDF across all cores
+    (the worker pool) and one ``mapInPandas`` pass (the parse path): paths
+    both the crawl and the analytics UDFs take.  Rarer paths (the decode
+    queries' binary Arrow reader) pay their first use in their own query.
+    A failing pass raises: it would fail the same way in the first query."""
     if getattr(spark, "_graft_warmed", False):
         return
     spark._graft_warmed = True
@@ -128,18 +134,5 @@ def _warm_start(spark: SparkSession) -> None:
         spark.range(cores, numPartitions=cores).mapInPandas(
             _warm_map, "id long"
         ).count()
-
-        # The decode-query shape (local binary relation -> FlatMapInPandas
-        # with binary/struct input and array<float> output) compiles its own
-        # JVM Arrow reader/writer paths on first use — measured ~3 s charged
-        # to whichever decode query runs first in a session (q83 3.3 s ->
-        # 0.75 s once warm).  Drive it once over a 4-row synthetic frame:
-        # same category as the rest of this function — no input data, the
-        # features are discarded, nothing is cached.
-        from .operators.multimodal import extract_features, synth_media_png
-
-        extract_features(
-            synth_media_png(spark, n=4), decode="real"
-        ).write.mode("overwrite").format("noop").save()
     finally:
         shutil.rmtree(d, ignore_errors=True)

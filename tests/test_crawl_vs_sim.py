@@ -188,3 +188,32 @@ def test_parity_tight_budget_config(spark, tmp_path):
         assert eng.get(rr.round_no, set()) == set(rr.fetched), f"round {rr.round_no}"
     eng_seen = {r["url"] for r in cat.read("url_seen").select("url").collect()}
     assert eng_seen == s.seen
+
+
+def test_round0_domain_stats_sums_not_null(spark, tmp_path):
+    """A host whose round-0 fetches all fail gets 0.0 running sums, not
+    NULL: round 0 merges into an empty domain_stats like every later round,
+    so the stored sums never depend on whether the host was first seen in
+    round 0."""
+    from adavnceseo_crawler_spark import schemas
+    from adavnceseo_crawler_spark.catalog import SnapshotCatalog
+
+    n, h = 50, 3
+    cfg = CrawlConfig(politeness_budget=3, batch_size=10, max_rounds=1)
+    cat = SnapshotCatalog(spark, str(tmp_path / "ds0"))
+    seeds = spark.createDataFrame(
+        [(synth.url_of(0, h),), ("https://nowhere.example/missing",)],
+        schemas.SEEDS,
+    )
+    crawl_loop.bootstrap(
+        spark, cat, cfg, seeds,
+        synth.gen_pages(spark, n, h, partitions=2),
+        synth.gen_robots(spark, h),
+    )
+    stats = crawl_loop.run_crawl(spark, cat, cfg)
+    assert stats[0]["fetched"] == 1 and stats[0]["failed"] == 1
+    row = (
+        cat.read("domain_stats").filter(F.col("host") == "nowhere.example").first()
+    )
+    assert row["success_count"] == 0 and row["total_count"] == 1
+    assert row["sum_crawl_time"] == 0.0  # None at round 0 would store NULL

@@ -190,6 +190,10 @@ def test_full_crawl_rounds_over_http(spark, http_server, tmp_path):
     )
     robots = spark.createDataFrame([], schemas.ROBOTS)
     loop.bootstrap(spark, cat, cfg, seeds, None, robots)
+    # http mode reads no web table, and bootstrap writes no empty table
+    for t in ("web", "url_metadata", "crawl_log", "domain_stats",
+              "frontier_consumed"):
+        assert cat.latest(t) is None, t
     stats = loop.run_crawl(spark, cat, cfg)
 
     assert stats[0]["fetched"] == 2 and stats[0]["failed"] == 1
