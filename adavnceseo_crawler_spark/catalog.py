@@ -9,7 +9,12 @@ overwrite, time travel, resume-from-latest — over plain partitioned Parquet:
   appears, written via tempfile + ``os.rename`` (atomic on POSIX);
 * a manifest lists **all** live data dirs for that snapshot (append = previous
   dirs + new dir; overwrite = new dir only), so readers never see partial
-  writes and a killed job resumes from the last complete manifest.
+  writes and a killed job resumes from the last complete manifest;
+* a manifest also carries the schema of the frame it wrote (as Iceberg's
+  table metadata does), so ``read`` opens a table without the Spark job that
+  parquet schema inference costs.  A snapshot registered without a write
+  (``register_external``) or written before manifests carried the schema is
+  read by inference.
 
 On a real cluster, swap this for the Iceberg catalog
 (``spark.sql.catalog.* = org.apache.iceberg.spark.SparkCatalog``) — the crawl
@@ -33,6 +38,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -41,6 +47,10 @@ class Snapshot:
     mode: str
     dirs: list[str]
     meta: dict[str, Any]
+    # the written frame's StructType as JSON data; None for a snapshot
+    # registered without a write (register_external, manifest-only) or a
+    # manifest written before tables carried their schema
+    schema: dict[str, Any] | None = None
 
 
 class SnapshotCatalog:
@@ -72,7 +82,10 @@ class SnapshotCatalog:
                 with open(os.path.join(mandir, f)) as fh:
                     d = json.load(fh)
                 out.append(
-                    Snapshot(d["snapshot_id"], d["mode"], d["dirs"], d.get("meta", {}))
+                    Snapshot(
+                        d["snapshot_id"], d["mode"], d["dirs"],
+                        d.get("meta", {}), d.get("schema"),
+                    )
                 )
             except (json.JSONDecodeError, KeyError, OSError):
                 continue  # torn/partial manifest writes are invisible
@@ -98,7 +111,7 @@ class SnapshotCatalog:
         dirs = [data_dir] if mode == "overwrite" else (prev.dirs if prev else []) + [
             data_dir
         ]
-        snap = Snapshot(sid, mode, dirs, meta or {})
+        snap = Snapshot(sid, mode, dirs, meta or {}, df.schema.jsonValue())
         return snap, round(time.monotonic() - t0, 3)
 
     def commit(
@@ -219,6 +232,7 @@ class SnapshotCatalog:
                 "mode": snap.mode,
                 "dirs": snap.dirs,
                 "meta": snap.meta,
+                "schema": snap.schema,
             },
             indent=1,
         )
@@ -230,7 +244,9 @@ class SnapshotCatalog:
     # -- read ------------------------------------------------------------------
     def read(self, table: str, snapshot_id: int | None = None) -> DataFrame | None:
         """The snapshot's rows, or None for an empty table: one with no
-        snapshot yet or whose snapshot lists no data dir (manifest-only)."""
+        snapshot yet or whose snapshot lists no data dir (manifest-only).
+        A snapshot that carries its schema opens without a Spark job; one
+        without (register_external) pays parquet schema inference."""
         if snapshot_id is None:
             snap = self.latest(table)
         else:
@@ -240,7 +256,10 @@ class SnapshotCatalog:
             )
         if snap is None or not snap.dirs:
             return None
-        return self.spark.read.parquet(*snap.dirs)
+        reader = self.spark.read
+        if snap.schema is not None:
+            reader = reader.schema(StructType.fromJson(snap.schema))
+        return reader.parquet(*snap.dirs)
 
     def exists(self, table: str) -> bool:
         return self.latest(table) is not None

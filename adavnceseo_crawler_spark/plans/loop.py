@@ -16,7 +16,7 @@ in-process RAM (url_frontier.py:24) and Redis is flushed on startup
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
@@ -66,7 +66,12 @@ def bootstrap(
     elif web is not None:  # http fetch mode reads no web table
         cat.commit("web", web, mode="overwrite")
     cat.commit("robots", robots, mode="overwrite")
-    frontier0 = seed_frontier(seeds)
+    # the seed count rides the checkpoint as round 0's frontier-size hint,
+    # observed on the write like every round's frontier commit
+    obs_front = Observation()
+    frontier0 = seed_frontier(seeds).observe(
+        obs_front, F.count(F.lit(1)).alias("n")
+    )
     cat.commit("frontier", frontier0, mode="overwrite", meta={"round": 0})
     seen0 = cat.read("frontier").select(
         "url_hash", "url", F.lit(0).alias("round")
@@ -89,7 +94,10 @@ def bootstrap(
         )
         for df in caches:
             df.unpersist()
-    _checkpoint(spark, cat, -1, {"next_consumed_rows": 0})
+    _checkpoint(
+        spark, cat, -1,
+        {"next_frontier_rows": int(obs_front.get["n"]), "next_consumed_rows": 0},
+    )
 
 
 TABLES = (

@@ -206,8 +206,8 @@ def run_round(
     # the frontier row count is known from the PREVIOUS round's write
     # observation (threaded through the checkpoint meta) — a standalone
     # count() job here is pure per-round fixed cost that does not shrink
-    # with cores; it runs only when no hint exists (bootstrap, old
-    # checkpoints)
+    # with cores; it runs only when no hint exists (a checkpoint from before
+    # bootstrap observed its seed count, a direct run_round call)
     urls_in = urls_in_hint if urls_in_hint is not None else frontier.count()
     if urls_in == 0:
         frontier.unpersist()

@@ -18,6 +18,7 @@ operator, not the synthesis.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -31,7 +32,19 @@ STOPWORDS = ("the", "a", "an", "and", "or", "but", "in", "on", "at", "to")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Open a table with the schema inferred at its first read in this
+    session: inference is a Spark job, so later reads pass the memoized
+    schema and submit none.  The memo key is the path's (mtime, size), so a
+    rewritten table is inferred again."""
+    path = f"{sf_dir}/{name}.parquet"
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    schemas = getattr(spark, "_graft_schemas", None)
+    if schemas is None:
+        schemas = spark._graft_schemas = {}
+    if key not in schemas:
+        schemas[key] = spark.read.parquet(path).schema
+    return spark.read.schema(schemas[key]).parquet(path)
 
 
 def q(name: str, sql: str | None = None):

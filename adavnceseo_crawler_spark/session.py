@@ -59,6 +59,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
+        # python workers fork from the package's daemon, which spares each
+        # task a re-read of pyspark.zip's directory (see worker_daemon.py)
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{ram_mib // 4}m"),

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -19,3 +20,18 @@ def tmp_catalog(spark, tmp_path):
     from adavnceseo_crawler_spark.catalog import SnapshotCatalog
 
     return SnapshotCatalog(spark, str(tmp_path / "warehouse"))
+
+
+def count_jobs(spark, fn):
+    """Run ``fn()`` under a fresh job group; return its result and the
+    number of Spark jobs it submitted."""
+    sc = spark.sparkContext
+    group = f"count_jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

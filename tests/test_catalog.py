@@ -3,6 +3,14 @@
 import json
 import os
 
+import pytest
+from conftest import count_jobs
+
+from adavnceseo_crawler_spark import synth
+from adavnceseo_crawler_spark.catalog import SnapshotCatalog
+from adavnceseo_crawler_spark.config import CrawlConfig
+from adavnceseo_crawler_spark.plans import loop
+
 
 def test_overwrite_and_append(tmp_catalog, spark):
     df1 = spark.createDataFrame([(1,), (2,)], "a int")
@@ -229,3 +237,38 @@ def test_vacuum_path_spelling_safe(tmp_catalog, spark, tmp_path):
     os.symlink(tmp_catalog.root, link)
     assert SnapshotCatalog(spark, link).vacuum("t") == 0
     assert tmp_catalog.read("t").count() == 2
+
+
+@pytest.mark.parametrize("use_bloom", [False, True])
+def test_crawl_tables_open_without_a_job(spark, tmp_path, use_bloom):
+    """Every table a bootstrap plus a 2-round crawl commits carries its
+    schema in the manifest: reading it submits no Spark job and gives the
+    schema parquet inference would.  A table registered without a write
+    still reads, by inference."""
+    cfg = CrawlConfig(
+        politeness_budget=3, batch_size=30, compact_every=3,
+        use_bloom=use_bloom, bloom_capacity=100_000, bloom_buckets=8,
+    )
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    loop.bootstrap(
+        spark, cat, cfg,
+        synth.gen_seeds(spark, 200, 6),
+        synth.gen_pages(spark, 200, 6, partitions=4),
+        synth.gen_robots(spark, 6),
+    )
+    loop.run_crawl(spark, cat, cfg, max_rounds=2)
+
+    written = [t for t in loop.TABLES if cat.exists(t) and cat.latest(t).dirs]
+    assert set(written) == set(loop.TABLES) - (
+        set() if use_bloom else {"bloom_shards"}
+    )
+    for t in written:
+        df, jobs = count_jobs(spark, lambda: cat.read(t))
+        assert jobs == 0, t
+        assert df.schema == spark.read.parquet(*cat.latest(t).dirs).schema, t
+
+    cat.register_external("ext", cat.latest("crawl_log").dirs)
+    ext, jobs = count_jobs(spark, lambda: cat.read("ext"))
+    assert jobs >= 1  # schema inference: the job the manifest schema spares
+    assert ext.schema == cat.read("crawl_log").schema
+    assert ext.count() == cat.read("crawl_log").count() > 0

@@ -71,3 +71,23 @@ def test_query_matches_oracle(spark, qname):
     assert sm == om, f"{qname}: first mismatches at {mism}: " + "; ".join(
         f"spark={sm[i]} oracle={om[i]}" for i in mism[:2]
     )
+
+
+def test_table_schema_inferred_once_per_session(spark, tmp_path):
+    """``_t`` infers a table's schema at its first read in the session; a
+    second read submits no Spark job, and a rewritten table is re-inferred."""
+    from conftest import count_jobs
+
+    from adavnceseo_crawler_spark.queries import _t
+
+    sf = str(tmp_path)
+    spark.range(5).write.parquet(f"{sf}/t.parquet")
+    _, first = count_jobs(spark, lambda: _t(spark, sf, "t"))
+    df, second = count_jobs(spark, lambda: _t(spark, sf, "t"))
+    assert (first >= 1, second) == (True, 0)
+    assert df.count() == 5
+
+    spark.range(3).selectExpr("id", "'x' AS s").write.mode("overwrite").parquet(
+        f"{sf}/t.parquet"
+    )
+    assert _t(spark, sf, "t").columns == ["id", "s"]

@@ -11,7 +11,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def test_workers_import_package_outside_repo(tmp_path):
     """The package is on the DRIVER's sys.path only (no PYTHONPATH) and the
     cwd is outside the repo: get_spark's warm-up and a user mapInPandas that
-    imports the package must both run on the python workers."""
+    imports the package must both run on the python workers, which start
+    through the package's worker daemon."""
     script = tmp_path / "probe.py"
     script.write_text(textwrap.dedent(f"""
         import sys
@@ -19,7 +20,14 @@ def test_workers_import_package_outside_repo(tmp_path):
         from adavnceseo_crawler_spark.session import get_spark
 
         def probe(batches):
-            import adavnceseo_crawler_spark  # noqa: F401
+            import zipimport
+
+            from adavnceseo_crawler_spark import worker_daemon
+
+            # the worker forked from the package's daemon, which swapped in
+            # the lazy zip-directory reread
+            code = zipimport.zipimporter.invalidate_caches.__code__
+            assert code.co_filename == worker_daemon.__file__, code
             yield from batches
 
         spark = get_spark(app_name="probe", master="local[1]")
