@@ -70,7 +70,7 @@ def fit_bpe(
     merge list [(left, right), ...].  Stops early when the best pair's
     weighted count drops below ``min_count``."""
     words = (
-        df.select(F.explode(words_col(F.col(text_col))).alias("w"))
+        df.select(F.explode(words_col(text_col)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -161,7 +161,7 @@ def bpe_encode(
 
     return df.select(
         F.col(id_col),
-        words_col(F.col(text_col)).alias("_ws"),
+        words_col(text_col).alias("_ws"),
     ).select(
         id_col,
         F.size("_ws").cast("long").alias("n_words"),

@@ -37,37 +37,43 @@ LANG_MARKERS = {
 }
 
 
-def regexp_ci_count(text: Column, pattern: str) -> Column:
-    """count of case-insensitive regex matches (len(re.findall(p, s, re.I)))."""
-    return F.regexp_count(text, F.lit(f"(?i){pattern}"))
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal.  The SQL parser unescapes
+    backslash sequences inside literals, so a regex's backslashes (and any
+    quote) are escaped to reach the regex engine unchanged."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def content_type_col(text: Column) -> Column:
-    """A7 argmax classification (processor.py:193-201): the reference takes
-    the first pattern (dict order) whose count strictly exceeds the running
-    max, starting from 0 — so all-zero counts yield 'unknown' and ties keep
-    the earlier pattern."""
-    # strictly-greater argmax via ONE ordered struct comparison: the previous
-    # fold of nested whens re-embedded every earlier count expression in each
-    # later branch (the k-th pattern's count appeared ~2^(K-k) times in the
-    # final tree), defeating codegen subexpression sharing.  greatest() over
-    # (count, -index, name) structs evaluates each regexp_count ONCE; the
-    # sentinel ranks above any zero-count pattern (ni=1 > -k) and below any
-    # positive count, reproducing strictly-greater/first-wins exactly.
-    cands = [
-        F.struct(
-            F.lit(0).alias("c"), F.lit(1).alias("ni"), F.lit("unknown").alias("n")
-        )
+def _argmax_name(cands: list[tuple[str, str]], default: str) -> Column:
+    """Name of the first candidate whose count strictly exceeds every earlier
+    one, starting from 0 (``default`` when all counts are 0).  ``cands`` are
+    (name, SQL count expression) pairs in priority order."""
+    # ONE ordered struct comparison: greatest() over (count, -index, name)
+    # structs evaluates each count once (a fold of nested whens re-embeds
+    # every earlier count in each later branch, ~2^(K-k) copies of the k-th,
+    # defeating codegen subexpression sharing); the sentinel ranks above any
+    # zero-count candidate (ni=1 > -k) and below any positive count,
+    # reproducing strictly-greater/first-wins exactly
+    structs = [f"named_struct('c', 0, 'ni', 1, 'n', {sql_str(default)})"] + [
+        f"named_struct('c', {cnt}, 'ni', {-i}, 'n', {sql_str(name)})"
+        for i, (name, cnt) in enumerate(cands)
     ]
-    for i, (name, pat) in enumerate(CONTENT_PATTERNS):
-        cands.append(
-            F.struct(
-                regexp_ci_count(text, pat).alias("c"),
-                F.lit(-i).alias("ni"),
-                F.lit(name).alias("n"),
-            )
-        )
-    return F.greatest(*cands)["n"]
+    return F.expr(f"greatest({', '.join(structs)}).n")
+
+
+def content_type_col(text: str) -> Column:
+    """A7 argmax classification (processor.py:193-201) of column ``text``:
+    the reference takes the first pattern (dict order) whose count strictly
+    exceeds the running max, starting from 0 — so all-zero counts yield
+    'unknown' and ties keep the earlier pattern.  Counts are case-insensitive
+    regex matches (len(re.findall(p, s, re.I)))."""
+    return _argmax_name(
+        [
+            (name, f"regexp_count({text}, {sql_str('(?i)' + pat)})")
+            for name, pat in CONTENT_PATTERNS
+        ],
+        "unknown",
+    )
 
 
 def quality_score_col(
@@ -100,42 +106,21 @@ def word_count_col(text: Column) -> Column:
     )
 
 
-def token_count_col(text: Column) -> Column:
-    """BPE-ish token estimate: word-ish pieces + standalone punctuation."""
-    return F.size(
-        F.regexp_extract_all(text, F.lit(r"[A-Za-z0-9]+|[^\sA-Za-z0-9]"), F.lit(0))
-    )
+def token_count_col(text: str) -> Column:
+    """BPE-ish token estimate of column ``text``: word-ish pieces +
+    standalone punctuation."""
+    pat = sql_str(r"[A-Za-z0-9]+|[^\sA-Za-z0-9]")
+    return F.expr(f"size(regexp_extract_all({text}, {pat}, 0))")
 
 
-def _marker_count(text_lower: Column, words: tuple[str, ...]) -> Column:
-    pat = "(^| )(" + "|".join(words) + ")( |$)"
-    # padded-word counting via split on the marker set
-    return F.size(
-        F.regexp_extract_all(text_lower, F.lit("\\b(" + "|".join(words) + ")\\b"), F.lit(0))
-    )
-
-
-def lang_id_col(text: Column) -> Column:
-    """Stopword-marker language heuristic (argmax of marker hits; 'und' =
-    undetermined when nothing matches)."""
-    # same strictly-greater argmax-by-struct shape as content_type_col: each
-    # marker scan is evaluated once instead of being duplicated through a
-    # nested-when fold (5 regexp_extract_all scans per row, not O(2^5))
-    lower = F.lower(text)
-    cands = [
-        F.struct(
-            F.lit(0).alias("c"), F.lit(1).alias("ni"), F.lit("und").alias("n")
-        )
-    ]
-    for i, (lang, words) in enumerate(LANG_MARKERS.items()):
-        cands.append(
-            F.struct(
-                _marker_count(lower, words).alias("c"),
-                F.lit(-i).alias("ni"),
-                F.lit(lang).alias("n"),
-            )
-        )
-    return F.greatest(*cands)["n"]
+def lang_id_col(text: str) -> Column:
+    """Stopword-marker language heuristic on column ``text`` (argmax of
+    marker hits; 'und' = undetermined when nothing matches)."""
+    cands = []
+    for lang, words in LANG_MARKERS.items():
+        pat = sql_str(r"\b(" + "|".join(words) + r")\b")
+        cands.append((lang, f"size(regexp_extract_all(lower({text}), {pat}, 0))"))
+    return _argmax_name(cands, "und")
 
 
 def text_quality_cols(text: Column) -> dict[str, Column]:

@@ -46,36 +46,27 @@ def chunk_documents(
     if not 0 <= overlap < chunk_words:
         raise ValueError("need 0 <= overlap < chunk_words")
     step = chunk_words - overlap
-    ws = df.select(
-        F.col(id_col), words_col(F.col(text_col)).alias("_ws")
-    ).select(
-        id_col,
-        "_ws",
-        F.sequence(
-            F.lit(0),
-            F.greatest(F.size("_ws") - 1, F.lit(0)),
-            F.lit(step),
-        ).alias("_starts"),
-    )
+    # window starts are NULL for an empty document, and posexplode of NULL
+    # emits no rows: an explicit size(_ws) > 0 filter would be pushed below
+    # the projection and split every document once more
+    starts = f"IF(size(_ws) > 0, sequence(0, size(_ws) - 1, {step}), NULL)"
     return (
-        ws.filter(F.size("_ws") > 0)
+        df.select(F.col(id_col), words_col(text_col).alias("_ws"))
         .select(
             id_col,
             "_ws",
-            F.posexplode("_starts").alias("chunk_id", "_start"),
+            F.posexplode(F.expr(starts)).alias("chunk_id", "_start"),
         )
-        .select(
+        .selectExpr(
             id_col,
             "chunk_id",
-            F.slice(
-                "_ws", F.col("_start") + 1, F.lit(chunk_words)
-            ).alias("_chunk"),
+            f"slice(_ws, _start + 1, {chunk_words}) AS _chunk",
         )
-        .select(
+        .selectExpr(
             id_col,
-            F.col("chunk_id").cast("int").alias("chunk_id"),
-            F.size("_chunk").cast("long").alias("n_words"),
-            F.concat_ws(" ", "_chunk").alias("chunk"),
+            "CAST(chunk_id AS INT) AS chunk_id",
+            "CAST(size(_chunk) AS BIGINT) AS n_words",
+            "concat_ws(' ', _chunk) AS chunk",
         )
     )
 
@@ -102,7 +93,7 @@ def token_budget_mix(
         df.select(
             source_col,
             id_col,
-            F.size(words_col(F.col(text_col))).cast("long").alias("n_tokens"),
+            F.size(words_col(text_col)).cast("long").alias("n_tokens"),
         )
         .withColumn("cum_tokens", F.sum("n_tokens").over(w))
         .filter(F.col("cum_tokens") - F.col("n_tokens") < budget_tokens)
@@ -139,7 +130,7 @@ def pack_sequences(
     counted = df.select(
         F.col(shard_col).cast("string").alias("shard"),
         F.col(id_col).cast("long").alias("doc_id"),
-        F.size(words_col(F.col(text_col))).cast("long").alias("n_tokens"),
+        F.size(words_col(text_col)).cast("long").alias("n_tokens"),
     )
 
     def pack(pdf):

@@ -39,7 +39,7 @@ from .quality import _grams_expr, words_col
 
 def _bigrams(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.select(
-        F.col(id_col), words_col(F.col(text_col)).alias("_ws")
+        F.col(id_col), words_col(text_col).alias("_ws")
     ).select(
         id_col,
         F.explode(F.expr(_grams_expr("_ws", 2))).alias("bg"),
@@ -68,7 +68,7 @@ def bigram_lm_fit(
     c1 = bg.groupBy("ctx").agg(F.count(F.lit(1)).alias("c1"))
     v = (
         train.select(
-            F.explode(words_col(F.col(text_col))).alias("w")
+            F.explode(words_col(text_col)).alias("w")
         )
         .agg((F.count_distinct("w") + F.lit(1)).alias("v"))
     )

@@ -28,18 +28,17 @@ and then aggregates by ``doc_id``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# words: whitespace split, empties dropped — the repo-wide convention
-# (queries.q20, textstats.word_count_col)
-_WS = r"\s+"
+from ..functions.textstats import sql_str
 
 
-def words_col(text_col):
-    return F.filter(
-        F.split(F.trim(text_col), _WS), lambda x: x != F.lit("")
-    )
+def words_col(text_col: str) -> Column:
+    """Words of column ``text_col``: whitespace split, empties dropped — the
+    repo-wide convention (queries.q20, textstats.word_count_col)."""
+    ws = sql_str(r"\s+")
+    return F.expr(f"filter(split(trim({text_col}), {ws}), x -> x != '')")
 
 
 def _grams_expr(ws: str, n: int) -> str:
@@ -76,7 +75,7 @@ def gopher_repetition(
     groupBy(doc) conditional agg → left-join back to the per-doc base
     stats.  Two shuffles, both keyed by doc_id.
     """
-    ws = words_col(F.col(text_col))
+    ws = words_col(text_col)
     # materialize the tokenized base once (lazy localCheckpoint, self-
     # cleaning): it feeds both the gram explode and the final stats join,
     # and without the cut the split + per-word alpha rlike run twice
@@ -160,7 +159,7 @@ def decontaminate(
     def grams(df):
         return df.select(
             F.col(id_col),
-            words_col(F.col(text_col)).alias("_ws"),
+            words_col(text_col).alias("_ws"),
         ).select(
             id_col, F.explode(F.expr(_grams_expr("_ws", n))).alias("gram")
         )
@@ -212,7 +211,7 @@ def repeated_passages(
 
     grams = (
         df.select(
-            F.col(id_col), words_col(F.col(text_col)).alias("_ws")
+            F.col(id_col), words_col(text_col).alias("_ws")
         )
         .select(id_col, F.explode(F.expr(_grams_expr("_ws", n))).alias("gram"))
         .distinct()
@@ -291,7 +290,7 @@ def passage_scrub(
     # full regenerations of the gram stream — costs more than the spill.
     base = df.select(
         F.col(id_col),
-        words_col(F.col(text_col)).alias("_ws"),
+        words_col(text_col).alias("_ws"),
     ).localCheckpoint(eager=False)
     toks = base.select(
         id_col, F.posexplode("_ws").alias("pos", "word")

@@ -3,9 +3,13 @@
 * ``cosine_topk``   — brute-force baseline: JVM-side ``zip_with``/``aggregate``
   dot products (whole-stage codegen, no Python), TakeOrderedAndProject top-k.
 * ``cosine_pairs``  — thresholded near-dup pair scan (small n / oracle path).
-* ``lsh_topk``      — the scale path: random-hyperplane LSH (sign bits from
-  deterministic hyperplanes) buckets vectors so only same-bucket candidates
-  are scored; recall traded via n_planes.
+* ``lsh_topk``      — the scale path: multi-table sign-LSH (deterministic ±1
+  hyperplanes) prunes to vectors sharing a bucket with the query in any
+  table, then reranks them exactly; recall traded via tables and bits.
+  ``lsh_ann_join`` is its many-query batch form, a (tbl, bucket) equi-join.
+
+Expressions are built as SQL text from column names and parsed once
+(``F.expr`` / ``selectExpr``): one driver-to-JVM call per expression.
 
 All float math is promoted to double element-wise in a fixed left-to-right
 fold so results are bit-stable and match the DuckDB oracle.
@@ -15,21 +19,35 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _dot(a: str, b: str) -> str:
+    """SQL: dot product of array columns ``a`` and ``b``, each element
+    promoted to double, summed in one left-to-right fold."""
+    prod = "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)"
+    return f"aggregate(zip_with({a}, {b}, {prod}), 0D, (acc, v) -> acc + v)"
+
+
+def _cosine(a: str, b: str) -> str:
+    return f"{_dot(a, b)} / (sqrt({_dot(a, a)}) * sqrt({_dot(b, b)}))"
+
+
+def cosine_col(a: str, b: str) -> Column:
+    """Cosine of array columns ``a`` and ``b`` (column names)."""
+    return F.expr(_cosine(a, b))
+
+
+def _rerank_topk(
+    cand: DataFrame, k: int, id_col: str, vec_col: str, query_vec_col: str = "q"
+) -> DataFrame:
+    """Exact cosine of every candidate row, top-k by (cos desc, id asc)."""
+    scored = cand.selectExpr(
+        id_col, f"round({_cosine(vec_col, query_vec_col)}, 6) AS cos"
     )
-
-
-def cosine_col(a, b):
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
+    return scored.orderBy(F.desc("cos"), F.asc(id_col)).limit(k)
 
 
 def cosine_topk(
@@ -37,11 +55,7 @@ def cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k by cosine to a single query vector (query: 1-row df, column q)."""
-    joined = df.crossJoin(F.broadcast(query))
-    scored = joined.select(
-        id_col, F.round(cosine_col(F.col(vec_col), F.col("q")), 6).alias("cos")
-    )
-    return scored.orderBy(F.desc("cos"), F.asc(id_col)).limit(k)
+    return _rerank_topk(df.crossJoin(F.broadcast(query)), k, id_col, vec_col)
 
 
 def cosine_pairs(
@@ -51,9 +65,8 @@ def cosine_pairs(
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    cos = cosine_col(F.col("va"), F.col("vb"))
     return (
-        pairs.withColumn("_c", cos)
+        pairs.withColumn("_c", cosine_col("va", "vb"))
         .filter(F.col("_c") >= threshold)
         .select("id_a", "id_b", F.round("_c", 6).alias("cos"))
     )
@@ -62,28 +75,6 @@ def cosine_pairs(
 # ---------------------------------------------------------------------------
 # LSH-bucketed ANN (scale path)
 # ---------------------------------------------------------------------------
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.RandomState(seed)
-    return rng.standard_normal((n_planes, dim)).astype(np.float64)
-
-
-def make_lsh_bucket_udf(dim: int, n_planes: int = 12, seed: int = 42):
-    """Gaussian-hyperplane sign bucket (vectorized: one stacked matmul per
-    Arrow batch + packbits — no per-row Python)."""
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    @F.pandas_udf(T.LongType())
-    def lsh_bucket(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series(np.zeros(0, dtype=np.int64))
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vs])  # (n, dim)
-        signs = (mat @ planes.T) > 0  # (n, n_planes)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series(signs @ weights)
-
-    return lsh_bucket
-
-
 # Published LSH operating points (BENCH/ann_calibration.py sweep over the
 # planted-near-neighbor fixture, synth.gen_planted_vectors: median true-
 # neighbor cos 0.917 — the regime ANN dedup/search targets; BENCH/
@@ -184,7 +175,7 @@ def with_lsh_buckets(
     join below is co-partitioned (no shuffle of the big side)."""
     udf = make_multi_bucket_udf(planes)
     return (
-        df.withColumn("_bks", udf(F.col(vec_col)))
+        df.withColumn("_bks", udf(vec_col))
         .select("*", F.posexplode("_bks").alias("tbl", "bucket"))
         .drop("_bks")
     )
@@ -225,12 +216,10 @@ def lsh_ann_join(
     # vectors per candidate (guide: shuffle metadata, not payloads)
     scored = (
         bi.join(bq, ["tbl", "bucket"])
-        .select(
+        .selectExpr(
             query_id_col,
             id_col,
-            F.round(
-                cosine_col(F.col(vec_col), F.col(query_vec_col)), 6
-            ).alias("cos"),
+            f"round({_cosine(vec_col, query_vec_col)}, 6) AS cos",
         )
         .dropDuplicates([query_id_col, id_col])
     )
@@ -251,9 +240,9 @@ def lsh_ann_join(
 # (swap in KMeans-fitted centroids on a real cluster — the dataflow below is
 # unchanged: assign is one pass, probe prunes cells, rerank is exact).
 # ---------------------------------------------------------------------------
-def _sqdist_cols(dot_vv, dot_vc, dot_cc):
-    """‖v-c‖² = v·v - 2·v·c + c·c with a fixed op order (oracle mirror)."""
-    return dot_vv - 2.0 * dot_vc + dot_cc
+def _sqdist(v: str, c: str) -> str:
+    """SQL: ‖v-c‖² = v·v - 2·v·c + c·c with a fixed op order (oracle mirror)."""
+    return f"{_dot(v, v)} - {_dot(v, c)} * 2.0D + {_dot(c, c)}"
 
 
 def make_ivf_assign_udf(centroids: list[tuple[int, list[float]]]):
@@ -314,7 +303,7 @@ def ivf_topk(
     At 100 TB the cell id is a persisted partition column, so the probe is a
     partition-pruned scan — nothing else is read."""
     assign = make_ivf_assign_udf(centroids)
-    cells = index.withColumn("_cell", assign(F.col(vec_col)))
+    cells = index.withColumn("_cell", assign(vec_col))
     # query's n_probe nearest cells, computed on the (tiny) centroid list
     spark = index.sparkSession
     cdf = spark.createDataFrame(
@@ -322,24 +311,13 @@ def ivf_topk(
     )
     qcells = (
         cdf.crossJoin(F.broadcast(query))
-        .withColumn(
-            "_d2",
-            _sqdist_cols(
-                _dot(F.col(query_vec_col), F.col(query_vec_col)),
-                _dot(F.col(query_vec_col), F.col("cvec")),
-                _dot(F.col("cvec"), F.col("cvec")),
-            ),
-        )
+        .withColumn("_d2", F.expr(_sqdist(query_vec_col, "cvec")))
         .orderBy(F.asc("_d2"), F.asc("cid"))
         .limit(n_probe)
         .select(F.col("cid").alias("_cell"))
     )
     cand = cells.join(F.broadcast(qcells), "_cell").crossJoin(F.broadcast(query))
-    scored = cand.select(
-        id_col,
-        F.round(cosine_col(F.col(vec_col), F.col(query_vec_col)), 6).alias("cos"),
-    )
-    return scored.orderBy(F.desc("cos"), F.asc(id_col)).limit(k)
+    return _rerank_topk(cand, k, id_col, vec_col, query_vec_col)
 
 
 def lsh_topk(
@@ -353,17 +331,19 @@ def lsh_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Single-query ANN over the multi-table sign-LSH index: score only
-    vectors sharing a (tbl, bucket) with the query in ANY table (multi-table
-    union trades candidates for recall; n_bits trades bucket selectivity)."""
-    planes = rademacher_planes(n_tables, n_bits, dim)
-    res = lsh_ann_join(
-        df,
-        query.withColumn("query_id", F.lit(0)),
-        planes,
-        k=k,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col="query_id",
-        query_vec_col="q",
+    vectors sharing a bucket with the query in ANY table (multi-table union
+    trades candidates for recall; n_bits trades bucket selectivity).
+
+    The same prune-then-rerank shape as ``cosine_topk`` and ``ivf_topk``:
+    each side's bucket array is computed in one UDF pass, the one-row query
+    is broadcast to every row, and a row stays when any table's buckets
+    match — no explode, no shuffle, no window (``lsh_ann_join`` keeps the
+    (tbl, bucket) equi-join for many queries)."""
+    buckets = make_multi_bucket_udf(rademacher_planes(n_tables, n_bits, dim))
+    q = query.select("q", buckets("q").alias("_qb"))
+    cand = (
+        df.withColumn("_b", buckets(vec_col))
+        .crossJoin(F.broadcast(q))
+        .filter("exists(zip_with(_b, _qb, (a, b) -> a = b), m -> m)")
     )
-    return res.select(id_col, "cos").orderBy(F.desc("cos"), F.asc(id_col)).limit(k)
+    return _rerank_topk(cand, k, id_col, vec_col)

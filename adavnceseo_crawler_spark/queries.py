@@ -572,7 +572,7 @@ def q16(spark, sf):
     from .functions.textstats import content_type_col
 
     d = _t(spark, sf, "documents")
-    return d.select("doc_id", content_type_col(F.col("text")).alias("content_type"))
+    return d.select("doc_id", content_type_col("text").alias("content_type"))
 
 
 @q(
@@ -654,7 +654,7 @@ def q19(spark, sf):
     from .functions.textstats import lang_id_col
 
     d = _t(spark, sf, "documents")
-    return d.select("doc_id", "lang", lang_id_col(F.col("text")).alias("lang_guess"))
+    return d.select("doc_id", "lang", lang_id_col("text").alias("lang_guess"))
 
 
 @q(
@@ -701,7 +701,7 @@ def q21(spark, sf):
     from .functions.textstats import token_count_col
 
     d = _t(spark, sf, "documents")
-    return d.select("doc_id", token_count_col(F.col("text")).cast("long").alias("n_tokens"))
+    return d.select("doc_id", token_count_col("text").cast("long").alias("n_tokens"))
 
 
 # =============================================================================
@@ -2166,7 +2166,7 @@ def q48(spark, sf):
     feats = d.select(
         "doc_id",
         F.length("text").cast("long").alias("n_chars"),
-        token_count_col(F.col("text")).cast("long").alias("n_tokens"),
+        token_count_col("text").cast("long").alias("n_tokens"),
         F.when((art == 0) & (prod == 0), "other")
         .when(art >= prod, "article")
         .otherwise("product")
@@ -3742,7 +3742,7 @@ def q80(spark, sf):
     det = d.select(
         "source",
         "lang",
-        lang_id_col(F.col("text")).alias("lang_guess"),
+        lang_id_col("text").alias("lang_guess"),
     )
     g = det.groupBy("source", "lang_guess").agg(
         F.count(F.lit(1)).alias("cnt"),

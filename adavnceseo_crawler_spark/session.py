@@ -70,6 +70,13 @@ def get_spark(
     conf = dict(extra_conf or {})
     key = "spark.executorEnv.PYTHONPATH"
     conf[key] = os.pathsep.join(p for p in (_PACKAGE_ROOT, conf.get(key)) if p)
+    # the rule adds isnotnull(x) AND size(x) > 0 under a non-outer explode of
+    # x and pushes it below the projection that computes x, so x (a Python
+    # UDF, a token split) is evaluated twice per row.  The filter only drops
+    # rows the explode emits nothing for, so excluding it changes no row.
+    key = "spark.sql.optimizer.excludedRules"
+    rule = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    conf[key] = ",".join(r for r in (rule, conf.get(key)) if r)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -35,3 +35,35 @@ def count_jobs(spark, fn):
     # job-start events reach the status store through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def count_py4j(fn):
+    """Run ``fn()``; return its result and the number of Py4J commands its
+    thread sent to the JVM meanwhile (each one is a socket round trip).
+
+    Python's cyclic garbage collector is flushed before and paused during
+    ``fn``: a collection would release JVM references held by earlier,
+    unrelated objects, and each release is a command of its own."""
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    caller = threading.get_ident()
+    n = 0
+
+    def counting(self, command, *args, **kwargs):
+        nonlocal n
+        n += threading.get_ident() == caller
+        return send(self, command, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    ClientServerConnection.send_command = counting
+    try:
+        out = fn()
+    finally:
+        ClientServerConnection.send_command = send
+        gc.enable()
+    return out, n

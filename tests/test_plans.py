@@ -1,6 +1,8 @@
 """Physical-plan shape checks (SURVEY.md §4): broadcast joins where expected,
 parquet filter pushdown, salted top-k equivalence under Zipf skew."""
 
+import re
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -319,3 +321,65 @@ def test_corpus_pipeline_barriers_cached_and_lang_pushed(spark):
     assert "lang" in plan.split("PushedFilters")[1][:200], (
         plan.split("PushedFilters")[1][:300]
     )
+
+
+def _nodes(plan: str, name: str) -> int:
+    """Number of plan nodes called ``name`` (``Exchange`` is a shuffle; a
+    ``BroadcastExchange`` does not count)."""
+    return len(re.findall(rf"\b{name}\b", plan))
+
+
+def test_lsh_topk_prunes_with_one_udf_pass_per_side(spark):
+    """q29 buckets each side once and prunes the broadcast cross join by a
+    bucket match: two Python UDF passes, no shuffle, window or explode."""
+    from adavnceseo_crawler_spark.queries import QUERIES
+
+    plan = _plan(QUERIES["q29_lsh_ann_topk"](spark, "/root/testdata/sf0.001"))
+    counts = {
+        n: _nodes(plan, n)
+        for n in ("ArrowEvalPython", "Exchange", "Window", "Generate")
+    }
+    assert counts == {
+        "ArrowEvalPython": 2, "Exchange": 0, "Window": 0, "Generate": 0
+    }, plan
+
+
+def test_generator_inputs_evaluated_once(spark):
+    """No filter is inferred under an explode and pushed below the
+    projection that computes the exploded array: q68 splits each document
+    once, and q47 runs its bucket UDF once per side."""
+    from adavnceseo_crawler_spark.queries import QUERIES
+
+    def optimized(name):
+        df = QUERIES[name](spark, "/root/testdata/sf0.001")
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    q68 = optimized("q68_chunk_documents")
+    assert q68.count("split(") == 1, q68
+    q47 = optimized("q47_batch_ann_join")
+    assert _nodes(q47, "ArrowEvalPython") == 2, q47
+
+
+# Py4J commands a second build of each query sent (count_py4j) before its
+# operators built their expressions as SQL text: one call per Column
+# function, lambda and literal
+PARENT_BUILD_PY4J = {
+    "q16_content_classify": 342,
+    "q19_lang_id": 435,
+    "q24_cosine_topk": 483,
+    "q29_lsh_ann_topk": 819,
+}
+
+
+def test_operator_queries_build_in_few_py4j_calls(spark):
+    from conftest import count_py4j
+
+    from adavnceseo_crawler_spark.queries import QUERIES
+
+    got = {}
+    for name in PARENT_BUILD_PY4J:
+        build = QUERIES[name]
+        build(spark, "/root/testdata/sf0.001")  # infers the table schemas
+        _, got[name] = count_py4j(lambda: build(spark, "/root/testdata/sf0.001"))
+    print(f"\nbuild py4j calls: {got}")
+    assert all(0 < n <= PARENT_BUILD_PY4J[q] // 2 for q, n in got.items()), got

@@ -192,7 +192,7 @@ def _brute_topk(spark, index, queries, k):
     scored = j.select(
         "query_id",
         "vec_id",
-        F.round(cosine_col(F.col("embedding"), F.col("q")), 6).alias("cos"),
+        F.round(cosine_col("embedding", "q"), 6).alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(
@@ -282,7 +282,7 @@ def test_lsh_single_query_candidates_subset_and_scored_exactly(spark):
         for r in e.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(qv))
         .select(
-            "vec_id", F.round(cosine_col(F.col("embedding"), F.col("q")), 6).alias("cos")
+            "vec_id", F.round(cosine_col("embedding", "q"), 6).alias("cos")
         )
         .collect()
     }
@@ -347,7 +347,7 @@ def test_ivf_topk_scores_exact_and_prunes(spark):
         for r in index.crossJoin(F.broadcast(query))
         .select(
             "vec_id",
-            F.round(cosine_col(F.col("embedding"), F.col("q")), 6).alias("cos"),
+            F.round(cosine_col("embedding", "q"), 6).alias("cos"),
         )
         .collect()
     }
@@ -393,30 +393,6 @@ def test_charshingle_minhash_estimate_variant(spark):
         for r in minhash_dedup_pairs(d, threshold=0.8).collect()
     }
     assert pairs == {(0, 1): 1.0}
-
-
-def test_gaussian_lsh_bucket_udf_vectorized_matches_reference(spark):
-    """The Gaussian-hyperplane bucket UDF (batch matmul) equals the per-row
-    reference computation."""
-    import numpy as np
-
-    from adavnceseo_crawler_spark.operators.similarity import (
-        _hyperplanes,
-        make_lsh_bucket_udf,
-    )
-
-    e = _embs(spark).filter(F.col("vec_id") < 50)
-    got = {
-        r["vec_id"]: r["b"]
-        for r in e.select(
-            "vec_id", make_lsh_bucket_udf(dim=64, n_planes=12)(F.col("embedding")).alias("b")
-        ).collect()
-    }
-    planes = _hyperplanes(64, 12)
-    for r in e.collect():
-        v = np.asarray(r["embedding"], dtype=np.float64)
-        ref = int(sum(1 << j for j, s in enumerate(planes @ v > 0) if s))
-        assert got[r["vec_id"]] == ref
 
 
 def test_ols3_fit_recovers_coefficients(spark):
