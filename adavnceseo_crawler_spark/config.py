@@ -71,23 +71,14 @@ class CrawlConfig:
     store_parsed: bool = True
 
     # merge-on-read maintenance interval for the mutable state tables
-    # (url_metadata, frontier).  Normal rounds commit O(delta) appends —
+    # (url_metadata, frontier).  Every round commits O(delta) appends —
     # url_metadata gains this round's upsert rows, the frontier gains
     # adds (new links + retries) plus consumed tombstones — and readers
     # reconcile (catalog.resolve_latest / plans.round.read_frontier).
-    # Every ``compact_every`` rounds the round's commit rewrites the
-    # compacted base instead (Iceberg's MoR + periodic rewrite_data_files
-    # shape).  1 = compact every round (the copy-on-write behavior).
+    # Every ``compact_every`` rounds plans.round.compact_state then rewrites
+    # each base as its reconciled view and empties the tombstones (Iceberg's
+    # MoR + periodic rewrite_data_files shape).  1 = compact every round.
     compact_every: int = 8
-    # read-side tombstone anti-join: broadcast the consumed set only while it
-    # is genuinely small (≤ this many rows, known from the checkpoint-carried
-    # count), else take the shuffle join.  The broadcast build is
-    # driver-serial — measured ~10 s flat at 1.5M tombstones REGARDLESS of
-    # core count (BENCH/BASELINE.md round-3 decomposition), exactly the kind
-    # of fixed cost the scaling criterion punishes — while the shuffle path
-    # distributes; and at web scale consumed grows to compact_every ×
-    # round-batch and could never be broadcast anyway
-    consumed_broadcast_rows: int = 100_000
 
     # crawler-trap guard (operators/urlmine wired into the scheduler —
     # SURVEY §2 frontier-scheduling extension; reference analog is the
@@ -106,11 +97,11 @@ class CrawlConfig:
     # already-crawled URLs with the highest (change_rate × age, then age)
     # re-enter the frontier; their priority rides the frontier ``score``
     # column and is blended into the scheduling score with weight
-    # recrawl_weight (the enrich stage adds score_carried × weight — zero
-    # for normal links, whose carried score is NULL).  None = off.
+    # plans.round.RECRAWL_WEIGHT (the enrich stage adds score_carried ×
+    # weight — zero for normal links, whose carried score is NULL).
+    # None = off.
     recrawl_every: int | None = None
     recrawl_top: int = 1000
-    recrawl_weight: float = 1.0
 
     user_agent: str = (
         "Mozilla/5.0 (compatible; CustomCrawler/1.0; +http://example.com/bot)"

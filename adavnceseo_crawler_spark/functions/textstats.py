@@ -5,8 +5,8 @@ path); pandas UDFs only for genuinely non-expressible ops (fingerprint).
 
 Includes the reference's content classifier / quality score
 (processor.py:177-236) plus the large-scale pipeline ops the engine adds:
-language-ID (stopword heuristic), quality ratios, token counting, and a
-rolling-hash document fingerprint.
+language-ID (stopword heuristic), token counting, and a rolling-hash
+document fingerprint.
 """
 
 from __future__ import annotations
@@ -23,9 +23,6 @@ CONTENT_PATTERNS = (
     ("landing", "welcome|homepage|main"),
     ("listing", "category|archive|list|index"),
 )
-
-# reference stopword list (processor.py:85)
-STOPWORDS = ("the", "a", "an", "and", "or", "but", "in", "on", "at", "to")
 
 # tiny per-language marker sets for the n-gram/stopword language heuristic
 LANG_MARKERS = {
@@ -97,15 +94,6 @@ def quality_score_col(
     return F.least(score, F.lit(2.0))
 
 
-def word_count_col(text: Column) -> Column:
-    """C14: len(content.split()) (processor.py:209).  Python's str.split()
-    yields [] for empty/whitespace-only strings while Spark's split yields
-    [''], so empty tokens are filtered out — empty text counts 0, not 1."""
-    return F.size(
-        F.filter(F.split(F.trim(text), "\\s+"), lambda w: w != F.lit(""))
-    )
-
-
 def token_count_col(text: str) -> Column:
     """BPE-ish token estimate of column ``text``: word-ish pieces +
     standalone punctuation."""
@@ -121,32 +109,6 @@ def lang_id_col(text: str) -> Column:
         pat = sql_str(r"\b(" + "|".join(words) + r")\b")
         cands.append((lang, f"size(regexp_extract_all(lower({text}), {pat}, 0))"))
     return _argmax_name(cands, "und")
-
-
-def text_quality_cols(text: Column) -> dict[str, Column]:
-    """Quality-signal ratios for training-data filtering."""
-    n_chars = F.length(text).cast("double")
-    # filter the [''] that Spark's split yields for empty text (str.split()
-    # semantics: 0 words), so the ratios below see n_words = 0 there
-    words = F.filter(
-        F.split(F.trim(text), "\\s+"), lambda w: w != F.lit("")
-    )
-    n_words = F.size(words).cast("double")
-    n_alpha = F.length(F.regexp_replace(text, "[^A-Za-z]", "")).cast("double")
-    n_punct = F.length(F.regexp_replace(text, "[^.,;:!?]", "")).cast("double")
-    n_stop = F.size(
-        F.filter(words, lambda w: F.lower(w).isin(*STOPWORDS))
-    ).cast("double")
-    safe = F.greatest(n_chars, F.lit(1.0))
-    safe_w = F.greatest(n_words, F.lit(1.0))
-    return {
-        "n_chars": n_chars.cast("long"),
-        "n_words": n_words.cast("long"),
-        "alpha_ratio": n_alpha / safe,
-        "punct_ratio": n_punct / safe,
-        "stopword_ratio": n_stop / safe_w,
-        "mean_word_len": n_chars / safe_w,
-    }
 
 
 # ---------------------------------------------------------------------------

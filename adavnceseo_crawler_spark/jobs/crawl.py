@@ -25,8 +25,8 @@ def main() -> None:
     ap.add_argument("--bloom", action="store_true")
     ap.add_argument("--compact-every", type=int, default=8,
                     help="merge-on-read maintenance interval: rounds between "
-                         "full rewrites of the frontier/url_metadata bases "
-                         "(1 = copy-on-write every round)")
+                         "compactions of the frontier/url_metadata bases "
+                         "(1 = compact every round)")
     ap.add_argument("--synth-pages", type=int, default=0)
     ap.add_argument("--synth-hosts", type=int, default=100)
     ap.add_argument("--master", default=None)

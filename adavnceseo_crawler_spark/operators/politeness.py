@@ -21,13 +21,12 @@ TakeOrderedAndProject (no full sort).
 Layering: ``topk`` is the only window; ``trap_template_cap`` runs it per
 (host, url-template) cell, ``eligible`` composes the trap guard with the
 per-host budget, and the two schedulers add the global cut — lazily
-(``schedule_batch``) or counted with the compact-round complement
-(``schedule_batch_counted``).
+(``schedule_batch``) or counted (``schedule_batch_counted``).  Rows they
+do not schedule are not returned: they stay in the frontier, whose live
+view is ``plans.round.read_frontier``'s alone.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -41,16 +40,9 @@ def topk(
     k: int,
     order: list,
     salt_buckets: int = 8,
-    cache: bool = False,
-) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-    """Salted two-stage top-``k`` rows per ``keys`` under ``order``.
-
-    Returns (kept, dropped, caches), both frames with ``df``'s columns:
-    ``dropped`` is the lazy ``_rn > k`` complement of the SAME rankings
-    (``df \\ kept`` with zero extra shuffle).  ``cache=True`` pins the
-    rankings so kept and dropped share them; callers that never consume
-    ``dropped`` leave it off — each ranking then has a single consumer and
-    pinning a frontier-sized frame would buy nothing."""
+) -> DataFrame:
+    """Salted two-stage top-``k`` rows per ``keys`` under ``order``, with
+    ``df``'s columns."""
     cols = df.columns
     stages = [(keys, "_rn2")]
     if salt_buckets > 1:
@@ -58,16 +50,14 @@ def topk(
             "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
         )
         stages.insert(0, ((*keys, "_salt"), "_rn1"))
-    dropped, caches = [], []
     for part, rn in stages:
         w = Window.partitionBy(*part).orderBy(*order)
-        ranked = df.withColumn(rn, F.row_number().over(w))
-        if cache:
-            ranked = ranked.cache()
-            caches.append(ranked)
-        dropped.append(ranked.filter(F.col(rn) > k).select(*cols))
-        df = ranked.filter(F.col(rn) <= k).select(*cols)
-    return df, reduce(DataFrame.unionByName, dropped), caches
+        df = (
+            df.withColumn(rn, F.row_number().over(w))
+            .filter(F.col(rn) <= k)
+            .select(*cols)
+        )
+    return df
 
 
 def trap_template_cap(
@@ -76,8 +66,7 @@ def trap_template_cap(
     cap: int,
     order: list,
     salt_buckets: int = 8,
-    cache: bool = True,
-) -> tuple[DataFrame, DataFrame, DataFrame, list[DataFrame]]:
+) -> tuple[DataFrame, DataFrame]:
     """Crawler-trap guard (urlmine.mine_url_templates wired into the
     scheduler): cells of more than ``threshold`` URLs sharing one
     (host, url-template) are generated URL spaces — calendars, faceted
@@ -97,10 +86,10 @@ def trap_template_cap(
     (≤ N/threshold rows) and broadcast; only flagged cells' rows pay the
     ``topk`` window, keyed by (host, template).
 
-    Returns (kept, dropped, host_counts, caches): ``dropped`` rows stay in
-    the frontier (re-considered next round — the politeness-deferral
-    semantics), ``host_counts`` is the (host, _n) rollup for ``eligible``
-    to reuse; ``cache`` is passed to ``topk``."""
+    Returns (kept, host_counts): rows the cap holds back are not returned
+    — they stay in the frontier (re-considered next round, the
+    politeness-deferral semantics); ``host_counts`` is the (host, _n)
+    rollup for ``eligible`` to reuse."""
     with_t = df.withColumn("_tmpl", url_template(F.col("url")))
     cell_counts = with_t.groupBy("host", "_tmpl").agg(
         F.count(F.lit(1)).alias("_cn")
@@ -112,11 +101,8 @@ def trap_template_cap(
     cols = df.columns
     clean = with_t.join(trap_cells, ["host", "_tmpl"], "left_anti").select(*cols)
     trapped = with_t.join(trap_cells, ["host", "_tmpl"], "left_semi")
-    admitted, dropped, caches = topk(
-        trapped, ("host", "_tmpl"), cap, order, salt_buckets, cache
-    )
-    kept = clean.unionByName(admitted.select(*cols))
-    return kept, dropped.select(*cols), host_counts, caches
+    admitted = topk(trapped, ("host", "_tmpl"), cap, order, salt_buckets)
+    return clean.unionByName(admitted.select(*cols)), host_counts
 
 
 def eligible(
@@ -126,8 +112,7 @@ def eligible(
     salt_buckets: int = 8,
     trap_threshold: int | None = None,
     trap_cap: int = 5,
-    complement: bool = False,
-) -> tuple[DataFrame, DataFrame | None, list[DataFrame]]:
+) -> DataFrame:
     """Rows that pass the trap guard (when ``trap_threshold`` is set) and
     the per-host budget, before any global cut.
 
@@ -142,31 +127,19 @@ def eligible(
     the over-budget head may itself be too large to broadcast).  With the
     trap guard on, the counts are the cell-census rollup, taken PRE-cap: a
     host the cap pushes back under budget still takes the window path,
-    where top-k of ≤ budget rows is the identity.
-
-    Returns (eligible, rejected, caches).  ``complement=True`` pins the
-    rankings and returns ``rejected = df \\ eligible`` (trap-capped rows
-    included) with ``df``'s columns; otherwise ``rejected`` is None and
-    ``caches`` is empty."""
-    cols = df.columns
-    rejected, caches = [], []
+    where top-k of ≤ budget rows is the identity."""
     if trap_threshold is not None:
-        df, trap_dropped, counts, caches = trap_template_cap(
-            df, trap_threshold, trap_cap, order, salt_buckets, complement
+        df, counts = trap_template_cap(
+            df, trap_threshold, trap_cap, order, salt_buckets
         )
-        rejected.append(trap_dropped)
     else:
         counts = df.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
     over_hosts = counts.filter(F.col("_n") > budget).select("host")
-    kept, dropped, topk_caches = topk(
+    kept = topk(
         df.join(over_hosts, "host", "left_semi"), ("host",), budget, order,
-        salt_buckets, complement,
+        salt_buckets,
     )
-    elig = df.join(over_hosts, "host", "left_anti").unionByName(kept)
-    if not complement:
-        return elig, None, []
-    rejected = reduce(DataFrame.unionByName, [*rejected, dropped]).select(*cols)
-    return elig, rejected, caches + topk_caches
+    return df.join(over_hosts, "host", "left_anti").unionByName(kept)
 
 
 def _order_for(mode: str) -> list:
@@ -192,9 +165,7 @@ def schedule_batch(
     (url_frontier.py:82-88).  mode='fifo': seq asc, url asc — the live-path
     LPOP special case (url_frontier.py:240-252, SURVEY.md S3)."""
     order = _order_for(mode)
-    elig, _, _ = eligible(
-        df, budget, order, salt_buckets, trap_threshold, trap_cap
-    )
+    elig = eligible(df, budget, order, salt_buckets, trap_threshold, trap_cap)
     return elig.orderBy(*order).limit(batch_size)
 
 
@@ -204,49 +175,26 @@ def schedule_batch_counted(
     batch_size: int,
     salt_buckets: int = 8,
     mode: str = "priority",
-    complement: bool = True,
     trap_threshold: int | None = None,
     trap_cap: int = 5,
-) -> tuple[DataFrame, int, DataFrame | None, list[DataFrame]]:
-    """schedule_batch that skips the global cut when it cannot bind AND
-    returns the politeness complement for free.
+) -> tuple[DataFrame, int, list[DataFrame]]:
+    """schedule_batch that skips the global cut when it cannot bind.
 
-    Two serial chokepoints of the naive plan are elided:
+    ``orderBy().limit(batch_size)`` plans a single-partition global sort
+    (measured 14-20 s/round at the 4M-page scaling shape); it runs only
+    when the eligible count (needed by the caller anyway) exceeds the cap.
 
-    * ``orderBy().limit(batch_size)`` plans a single-partition global sort
-      (measured 14-20 s/round at the 4M-page scaling shape); it runs only
-      when the eligible count (needed by the caller anyway) exceeds the cap.
-    * the caller's ``leftover = df ⟕̸ scheduled`` anti-join re-shuffles the
-      whole frontier inside the commit barrier (measured 12-16 s of the
-      frontier table's commit wall) — but ``df \\ scheduled`` is EXACTLY the
-      filter complement of the window rankings ``eligible`` computes, so
-      ``rejected`` costs zero extra shuffle.
-
-    Returns (scheduled, n_scheduled, rejected, caches): ``rejected`` is
-    ``df \\ scheduled`` in both branches (when the global cut binds, the
-    eligible-minus-batch remainder is added via an anti-join against the
-    small scheduled set), and ``caches`` are the frames for the caller to
-    unpersist at round end.
-
-    ``complement=False`` (merge-on-read frontier rounds, plans/round.py:
-    leftover rows simply stay un-tombstoned in the frontier base): the
-    rankings are not pinned and ``rejected`` is None.  ``trap_threshold``
+    Returns (scheduled, n_scheduled, caches): ``caches`` are the frames
+    for the caller to unpersist at round end.  ``trap_threshold``
     (CrawlConfig.trap_template_threshold) enables the crawler-trap guard
     (see trap_template_cap)."""
     order = _order_for(mode)
-    elig, rejected, caches = eligible(
-        df, budget, order, salt_buckets, trap_threshold, trap_cap, complement
-    )
-    elig = elig.cache()
-    caches.append(elig)
+    elig = eligible(
+        df, budget, order, salt_buckets, trap_threshold, trap_cap
+    ).cache()
     n_eligible = elig.count()
     if n_eligible <= batch_size:
-        return elig, n_eligible, rejected, caches
+        return elig, n_eligible, [elig]
     scheduled = elig.orderBy(*order).limit(batch_size).cache()
     scheduled.count()
-    caches.append(scheduled)
-    if rejected is not None:
-        rejected = rejected.unionByName(
-            elig.join(scheduled.select("url"), "url", "left_anti")
-        )
-    return scheduled, batch_size, rejected, caches
+    return scheduled, batch_size, [elig, scheduled]

@@ -36,7 +36,7 @@ from ..functions.textstats import sql_str
 
 def words_col(text_col: str) -> Column:
     """Words of column ``text_col``: whitespace split, empties dropped — the
-    repo-wide convention (queries.q20, textstats.word_count_col)."""
+    repo-wide convention (queries.q20)."""
     ws = sql_str(r"\s+")
     return F.expr(f"filter(split(trim({text_col}), {ws}), x -> x != '')")
 

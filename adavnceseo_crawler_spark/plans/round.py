@@ -13,7 +13,7 @@ with a batch dataflow per round:
            ── link discovery → canonicalize → hygiene filter → dedup
            ── frontier maintenance, merge-on-read: append adds (new links ∪
               retries) + consumed tombstones; every cfg.compact_every rounds
-              rewrite the compacted base (leftover ∪ adds) instead
+              compact_state then rewrites the base as the live view
 
 Every ordering carries the total tie-break (score desc, url asc); the round
 clock is a deterministic function of the round number — no wall-clock inside
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
-from ..catalog import SnapshotCatalog, merge_upsert, resolve_latest
+from ..catalog import SnapshotCatalog, resolve_latest
 from ..config import CrawlConfig
 from ..functions import scoring
 from ..functions.htmlparse import parse_pages
@@ -48,6 +48,19 @@ from ..operators.robotsops import apply_robots
 
 ROUND_EPOCH = _dt.datetime(2025, 6, 1, 0, 0, 0)
 
+# read-side tombstone anti-join: broadcast the consumed set only while it is
+# genuinely small (≤ this many rows, known from the checkpoint-carried
+# count), else take the shuffle join.  The broadcast build is driver-serial
+# — measured ~10 s flat at 1.5M tombstones REGARDLESS of core count
+# (BENCH/BASELINE.md round-3 decomposition), exactly the kind of fixed cost
+# the scaling criterion punishes — while the shuffle path distributes; and
+# at web scale consumed grows to compact_every × round-batch and could never
+# be broadcast anyway
+CONSUMED_BROADCAST_ROWS = 100_000
+# weight of a re-enqueued row's carried Cho–G-M priority in the scheduling
+# score (cfg.recrawl_every; the enrich stage adds score_carried × weight)
+RECRAWL_WEIGHT = 1.0
+
 
 def round_ts(round_no: int) -> _dt.datetime:
     """Deterministic round clock (wall-clock is banned inside rounds)."""
@@ -59,9 +72,7 @@ def _empty(spark: SparkSession, schema) -> DataFrame:
 
 
 def read_frontier(
-    cat: SnapshotCatalog,
-    cfg: CrawlConfig | None = None,
-    consumed_rows_hint: int | None = None,
+    cat: SnapshotCatalog, consumed_rows_hint: int | None = None
 ) -> DataFrame | None:
     """Resolved (live) frontier view under merge-on-read maintenance.
 
@@ -69,8 +80,8 @@ def read_frontier(
     only adds (new links + retries) while dequeued/blocked entries are
     tombstoned by (url_hash, enqueue-round) appends to ``frontier_consumed``;
     the live frontier is ``base ⟕̸ consumed``.  Every cfg.compact_every
-    rounds the commit rewrites the compacted base and empties the tombstones
-    (run_round), so the join's right side is bounded by compact_every ×
+    rounds compact_state rewrites the base as this view and empties the
+    tombstones, so the join's right side is bounded by compact_every ×
     round-batch.
 
     The tombstones are grouped to ONE row per url_hash (collect_set of the
@@ -82,7 +93,7 @@ def read_frontier(
     keys and forced a second full shuffle of the base — measured +40 s/round
     at the 4-core 4M-page scaling shape).  While the checkpoint-carried
     tombstone count is small the grouped set is broadcast (no shuffle of the
-    base at all); past cfg.consumed_broadcast_rows it falls back to the
+    base at all); past CONSUMED_BROADCAST_ROWS it falls back to the
     shuffle join — at web scale the tombstone set cannot be broadcast."""
     base = cat.read("frontier")
     if base is None:
@@ -96,9 +107,8 @@ def read_frontier(
         cons.groupBy("url_hash").agg(F.collect_set("round").alias("_crounds"))
     )
     if (
-        cfg is not None
-        and consumed_rows_hint is not None
-        and consumed_rows_hint <= cfg.consumed_broadcast_rows
+        consumed_rows_hint is not None
+        and consumed_rows_hint <= CONSUMED_BROADCAST_ROWS
     ):
         cons_sets = F.broadcast(cons_sets)
     return (
@@ -176,6 +186,30 @@ def recrawl_rows_for(
     )
 
 
+def compact_state(
+    cat: SnapshotCatalog, round_no: int, consumed_rows: int | None
+) -> dict[str, float]:
+    """Merge-on-read compaction after round ``round_no``'s commit group (the
+    Iceberg ``rewrite_data_files`` shape): the ``frontier`` base is
+    rewritten as its live view (read_frontier, ``round`` restamped to
+    ``round_no + 1``), ``url_metadata`` as its latest row per key, and the
+    tombstones are then emptied by a manifest-only snapshot (no write job).
+    ``consumed_rows`` is the tombstone count after the round's append.
+    Returns the rewrites' data-write walls, keyed ``compact.<table>``."""
+    live = (
+        read_frontier(cat, consumed_rows)
+        .withColumn("round", F.lit(round_no + 1))
+        .select([f.name for f in schemas.FRONTIER.fields])
+    )
+    latest = resolve_latest(cat.read("url_metadata"), "url_hash", "last_crawled")
+    walls = cat.commit_many([
+        ("url_metadata", latest, "overwrite", {"round": round_no}),
+        ("frontier", live, "overwrite", {"round": round_no + 1}),
+    ])
+    cat.commit_manifest_only("frontier_consumed", {"round": round_no + 1})
+    return {f"compact.{t}": w for t, w in walls.items()}
+
+
 def run_round(
     spark: SparkSession,
     cat: SnapshotCatalog,
@@ -195,14 +229,10 @@ def run_round(
         times[label] = round(times.get(label, 0.0) + (t - _last[0]), 3)
         _last[0] = t
 
-    frontier = read_frontier(cat, cfg, consumed_rows_hint)
+    frontier = read_frontier(cat, consumed_rows_hint)
     if frontier is None:
         return {"round": round_no, "scheduled": 0, "fetched": 0, "done": True}
     frontier = frontier.cache()
-    # merge-on-read maintenance boundary: on a compact round this round's
-    # commit rewrites the compacted url_metadata/frontier bases (the old
-    # copy-on-write behavior); on normal rounds it appends O(delta) only
-    compact = cfg.compact_every <= 1 or (round_no + 1) % cfg.compact_every == 0
     # the frontier row count is known from the PREVIOUS round's write
     # observation (threaded through the checkpoint meta) — a standalone
     # count() job here is pure per-round fixed cost that does not shrink
@@ -281,15 +311,9 @@ def run_round(
         # into the scheduling score.  Normal links carry NULL → +0, and with
         # the feature off the expression is byte-identical to rounds 1-4
         # (sim parity).
-        score_expr = score_expr + F.lit(cfg.recrawl_weight) * F.coalesce(
+        score_expr = score_expr + F.lit(RECRAWL_WEIGHT) * F.coalesce(
             F.col("score"), F.lit(0.0)
         )
-    if cfg.recrawl_every:
-        # stash the carried Cho–G-M priority before the scheduling score
-        # overwrites the column: a compact round rewrites un-scheduled rows
-        # into the new frontier base and must restore THIS value (the
-        # blended scheduling score would re-blend next round — feedback)
-        cand = cand.withColumn("_carried", F.col("score"))
     cand = (
         cand
         .withColumn("path", F.coalesce(F.parse_url("url", F.lit("PATH")), F.lit("/")))
@@ -308,15 +332,11 @@ def run_round(
     # counted variant: materializes + counts the eligible cache (needed below
     # anyway, and the cache keeps the fetch broadcast from recomputing the
     # politeness window chain) and skips the single-partition global sort
-    # whenever the batch cap cannot bind
-    # the politeness complement (leftover) is only materialized on compact
-    # rounds, where the frontier base is rewritten in full; normal MoR rounds
-    # leave un-dequeued rows in place (no tombstone) so the scheduler skips
-    # the ranked-intermediate caches entirely (complement=False)
-    scheduled, n_scheduled, leftover, _sched_caches = schedule_batch_counted(
+    # whenever the batch cap cannot bind.  Un-dequeued rows get no tombstone:
+    # they stay in the frontier as they are
+    scheduled, n_scheduled, _sched_caches = schedule_batch_counted(
         allowed, cfg.politeness_budget, cfg.batch_size, cfg.salt_buckets,
-        mode=cfg.dequeue_mode, complement=compact,
-        trap_threshold=cfg.trap_template_threshold,
+        mode=cfg.dequeue_mode, trap_threshold=cfg.trap_template_threshold,
         trap_cap=cfg.trap_admit_per_round,
     )
     tick("schedule")
@@ -583,10 +603,10 @@ def run_round(
         )
     # ---- commits (snapshot per table, then the round checkpoint) --------------------
     # url_metadata MERGE (J7): upsert rows for every fetched/failed url.
-    # Merge-on-read: normal rounds APPEND only this round's upsert rows
+    # Merge-on-read: every round APPENDS only this round's upsert rows
     # (O(delta) write — the shape of an Iceberg MoR MERGE, whose data files
-    # are delta-sized and whose reconciliation lives in the reader); compact
-    # rounds rewrite the latest-per-key base (rewrite_data_files).
+    # are delta-sized and whose reconciliation lives in the reader);
+    # compact_state periodically rewrites the latest-per-key base.
     upd = (
         new_log.filter(F.col("error").isNull() | (F.col("error") != "robots_disallowed"))
         .select(
@@ -646,80 +666,36 @@ def run_round(
             ("parsed", parsed.select([f.name for f in schemas.PARSED.fields]),
              "append", m_this)
         )
-    commits: list[tuple] = [
-        ("domain_stats",
-         dstats_new.select([f.name for f in schemas.DOMAIN_STATS.fields]),
-         "overwrite", m_this),
-    ]
-
+    # frontier maintenance, merge-on-read: the frontier gains adds (new
+    # links ∪ retries ∪ re-enqueues); dequeued (scheduled) and robots-blocked
+    # rows are tombstoned by (url_hash, enqueue-round); un-dequeued rows stay
+    # in place.  Next round's urls_in = urls_in - consumed + adds, both
+    # observed on writes that run anyway.
     adds = retry.unionByName(new_entries).select(*front_cols)
     if recrawl_rows is not None:
         adds = adds.unionByName(recrawl_rows.select(*front_cols))
-    obs_front = Observation()
     obs_adds = Observation()
     obs_cons = Observation()
-    if compact:
-        # ---- compact round: rewrite both MoR bases (copy-on-write shape) ----
-        # next frontier = (live frontier \ this round's dequeue) ∪ adds; the
-        # live-minus-dequeued part is exactly the scheduler's complement.
-        # Observed row count rides the checkpoint as next round's urls_in.
-        leftover_next = leftover.select(
-            F.lit(round_no + 1).alias("round"),
-            "url",
-            "url_hash",
-            "host",
-            "depth",
-            # ADVICE r5: with freshness re-crawl on, a revived row that is
-            # not scheduled before the next compact round must keep its
-            # carried Cho–G-M priority (stashed as _carried before the
-            # scheduling score overwrote the column); plain links carry
-            # NULL either way.  With the feature off the literal keeps
-            # rounds byte-identical to the r1-4 behavior (sim parity).
-            (
-                F.col("_carried")
-                if cfg.recrawl_every
-                else F.lit(None).cast("double")
-            ).alias("score"),
-            "discovered_ts",
-            "seq",
-            "retries",
-        )
-        next_frontier = (
-            leftover_next.unionByName(adds)
-            .select(*front_cols)
-            .observe(obs_front, F.count(F.lit(1)).alias("n"))
-        )
-        meta_compacted = resolve_latest(
-            (meta or _empty(spark, schemas.URL_METADATA)).unionByName(upd),
-            "url_hash", "last_crawled",
-        )
-        commits += [
-            ("url_metadata", meta_compacted, "overwrite", m_this),
-            ("frontier", next_frontier, "overwrite", m_next),
-        ]
-    else:
-        # ---- normal round: O(delta) appends only -----------------------------
-        # frontier gains adds; dequeued (scheduled) and robots-blocked rows
-        # are tombstoned by (url_hash, enqueue-round) — un-dequeued rows are
-        # simply left in place, so the politeness complement (the bulk of the
-        # old full rewrite) is never recomputed, never rewritten.  Next
-        # round's urls_in = urls_in - consumed + adds, all observed on writes
-        # that run anyway.
-        consumed = (
-            scheduled.select("url_hash", "round")
-            .unionByName(blocked.select("url_hash", "round"))
-            .observe(obs_cons, F.count(F.lit(1)).alias("n"))
-        )
-        commits += [
-            ("url_metadata", upd, "append", m_this),
-            ("frontier",
-             adds.observe(obs_adds, F.count(F.lit(1)).alias("n")),
-             "append", m_next),
-            ("frontier_consumed", consumed, "append", m_next),
-        ]
-    commit_walls = cat.commit_many(commits)
-    if compact:  # the compacted base has no tombstones: empty, no write job
-        cat.commit_manifest_only("frontier_consumed", m_next)
+    consumed = (
+        scheduled.select("url_hash", "round")
+        .unionByName(blocked.select("url_hash", "round"))
+        .observe(obs_cons, F.count(F.lit(1)).alias("n"))
+    )
+    commit_walls = cat.commit_many([
+        ("domain_stats",
+         dstats_new.select([f.name for f in schemas.DOMAIN_STATS.fields]),
+         "overwrite", m_this),
+        ("url_metadata", upd, "append", m_this),
+        ("frontier",
+         adds.observe(obs_adds, F.count(F.lit(1)).alias("n")),
+         "append", m_next),
+        ("frontier_consumed", consumed, "append", m_next),
+    ])
+    n_consumed = int(obs_cons.get["n"])
+    next_frontier_rows = urls_in - n_consumed + int(obs_adds.get["n"])
+    next_consumed_rows = (
+        consumed_rows_hint + n_consumed if consumed_rows_hint is not None else None
+    )
     # hand the bulky appends to the write-behind pipeline.  Caches split two
     # ways: frames whose lineage backs a deferred write (parsed → pages,
     # new_log → crawl_log, the dedup caches → url_seen / bloom_shards,
@@ -732,22 +708,16 @@ def run_round(
     if raw_fetch is not None:
         deferred_caches.append(raw_fetch)
     pending = cat.commit_many_async(deferred, unpersist=deferred_caches)
-    for df in (frontier, cand, scheduled,
-               *(c for c in _sched_caches if c is not scheduled)):
+    for df in (frontier, cand, *_sched_caches):  # scheduled is among them
         df.unpersist()
-    tick("commits")
-
+    # every cfg.compact_every rounds the committed state is compacted; its
+    # rewrites read only sync-group tables, so they overlap the deferred
+    # writes started above
+    compact = cfg.compact_every <= 1 or (round_no + 1) % cfg.compact_every == 0
     if compact:
-        next_frontier_rows = int(obs_front.get["n"])
+        commit_walls.update(compact_state(cat, round_no, next_consumed_rows))
         next_consumed_rows = 0
-    else:
-        n_consumed = int(obs_cons.get["n"])
-        next_frontier_rows = urls_in - n_consumed + int(obs_adds.get["n"])
-        next_consumed_rows = (
-            consumed_rows_hint + n_consumed
-            if consumed_rows_hint is not None
-            else None
-        )
+    tick("commits")
 
     return {
         "round": round_no,

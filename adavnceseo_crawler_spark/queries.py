@@ -404,7 +404,7 @@ def q11(spark, sf):
         F.col("event_id"),
         F.col("value").alias("score"),
     )
-    ranked, _, _ = topk(
+    ranked = topk(
         e.withColumn("url", F.col("event_id").cast("string")),
         ("host",),
         5,
@@ -4047,8 +4047,8 @@ def q84(spark, sf):
     """Trap-capped scheduling (operators/politeness.trap_template_cap via
     the lazy schedule_batch — the same cap/census/window operators
     plans/round.py wires in through schedule_batch_counted, minus the
-    count jobs and complement caches that entry point adds for the crawl
-    loop's bookkeeping; identical row set, one job at the sink):
+    count jobs that entry point adds for the crawl loop's bookkeeping;
+    identical row set, one job at the sink):
     calendar-trap cells above the threshold admit their top-3 per round
     while letter-path URLs pass through; then the per-host politeness
     budget and the global cut.  The oracle replays the cell census + cap

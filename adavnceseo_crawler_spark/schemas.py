@@ -81,7 +81,7 @@ BLOOM_SHARDS = T.StructType(
 # per-URL crawl metadata (url_frontier.py:125-130, 169-186)
 # merge-on-read tombstones for dequeued/blocked frontier entries: the live
 # frontier is base ⟕̸ consumed on (url_hash, enqueue-round); compaction
-# (plans/round.py, cfg.compact_every) folds them back into the base
+# (plans/round.compact_state, cfg.compact_every) folds them into the base
 FRONTIER_CONSUMED = T.StructType(
     [
         T.StructField("url_hash", T.StringType(), False),

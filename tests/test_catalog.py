@@ -104,7 +104,6 @@ def test_read_frontier_tombstone_anti_join(tmp_catalog, spark):
     """MoR frontier view: base \\ consumed on (url_hash, round) — a retry
     row re-added at a later round survives its earlier tombstone."""
     from adavnceseo_crawler_spark import schemas
-    from adavnceseo_crawler_spark.config import CrawlConfig
     from adavnceseo_crawler_spark.plans.round import read_frontier, round_ts
 
     def frow(rnd, url, h):
@@ -126,15 +125,80 @@ def test_read_frontier_tombstone_anti_join(tmp_catalog, spark):
         spark.createDataFrame([frow(1, "https://hostx/a", "ha")], schemas.FRONTIER),
         mode="append",
     )
-    cfg = CrawlConfig()
     live = {
         (r["url_hash"], r["round"])
-        for r in read_frontier(tmp_catalog, cfg, consumed_rows_hint=1).collect()
+        for r in read_frontier(tmp_catalog, consumed_rows_hint=1).collect()
     }
     assert live == {("hb", 0), ("ha", 1)}
     # hint=0 short-circuits the anti-join entirely (returns base as-is)
-    raw = read_frontier(tmp_catalog, cfg, consumed_rows_hint=0).count()
+    raw = read_frontier(tmp_catalog, consumed_rows_hint=0).count()
     assert raw == 3
+
+
+def test_compact_state_rewrites_the_live_view(tmp_catalog, spark):
+    """Compaction after round 0's appends: the frontier base becomes the
+    live view restamped to round 1, the tombstones are emptied, and
+    url_metadata keeps one (the latest) row per key."""
+    from adavnceseo_crawler_spark import schemas
+    from adavnceseo_crawler_spark.plans.round import (
+        compact_state,
+        read_frontier,
+        round_ts,
+    )
+
+    def frow(rnd, name, score=None):
+        return (rnd, f"https://hostx/{name}", f"h{name}", "hostx", 0, score,
+                round_ts(0), 0, 0)
+
+    def mrow(name, rnd):
+        return (f"h{name}", round_ts(rnd), "success", 0.5, 0.1, 100 + rnd)
+
+    cat = tmp_catalog
+    cat.commit(
+        "frontier",
+        spark.createDataFrame(
+            [frow(0, "a"), frow(0, "b", 0.25), frow(0, "c")], schemas.FRONTIER
+        ),
+    )
+    cat.commit(
+        "url_metadata",
+        spark.createDataFrame([mrow("a", 0), mrow("b", 0)], schemas.URL_METADATA),
+    )
+    # round 0's commit group: /a is dequeued, fails and is retried, /d is new
+    cat.commit(
+        "frontier_consumed",
+        spark.createDataFrame([("ha", 0)], schemas.FRONTIER_CONSUMED),
+        mode="append",
+    )
+    cat.commit(
+        "frontier",
+        spark.createDataFrame([frow(1, "a"), frow(1, "d")], schemas.FRONTIER),
+        mode="append",
+    )
+    cat.commit(
+        "url_metadata",
+        spark.createDataFrame([mrow("a", 1)], schemas.URL_METADATA),
+        mode="append",
+    )
+    cols = [f.name for f in schemas.FRONTIER.fields]
+    live = sorted(
+        tuple({**r.asDict(), "round": 1}[c] for c in cols)
+        for r in read_frontier(cat, consumed_rows_hint=1).collect()
+    )
+    assert len(live) == 4
+
+    walls = compact_state(cat, 0, 1)
+    assert set(walls) == {"compact.frontier", "compact.url_metadata"}
+    assert cat.read("frontier").columns == cols
+    assert sorted(tuple(r) for r in cat.read("frontier").collect()) == live
+    assert cat.read("frontier_consumed") is None
+    assert read_frontier(cat, consumed_rows_hint=0).count() == 4
+    meta = {
+        r["url_hash"]: r["content_length"]
+        for r in cat.read("url_metadata").collect()
+    }
+    assert cat.read("url_metadata").count() == len(meta) == 2
+    assert meta == {"ha": 101, "hb": 100}
 
 
 def test_vacuum_and_expire_snapshots(tmp_catalog, spark):

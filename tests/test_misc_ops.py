@@ -236,8 +236,7 @@ def test_stateful_host_stats(spark, tmp_path):
 def test_schedule_batch_counted_equivalence(spark):
     """schedule_batch_counted returns the identical row set as schedule_batch
     in BOTH branches (cap binds / cap slack — the serial global sort never
-    runs in the slack branch), and its ``rejected`` complement is exactly
-    df minus scheduled in both.  Both schedulers are also pinned to an
+    runs in the slack branch).  Both schedulers are also pinned to an
     independent single-stage window reference, trap guard on and off."""
     from adavnceseo_crawler_spark.operators.politeness import (
         schedule_batch,
@@ -249,21 +248,17 @@ def test_schedule_batch_counted_equivalence(spark):
         for i in range(60)
     ]
     df = spark.createDataFrame(rows, "url string, host string, score double, seq long")
-    all_urls = {r["url"] for r in df.collect()}
     for batch_size in (7, 1000):  # binds / cannot bind
         want = {
             r["url"]
             for r in schedule_batch(df, budget=9, batch_size=batch_size,
                                     salt_buckets=2).collect()
         }
-        got_df, n, rejected, caches = schedule_batch_counted(
+        got_df, n, caches = schedule_batch_counted(
             df, budget=9, batch_size=batch_size, salt_buckets=2
         )
         got = {r["url"] for r in got_df.collect()}
         assert got == want and n == len(want)
-        rej = {r["url"] for r in rejected.collect()}
-        assert rej == all_urls - got  # exact complement, no overlap, no loss
-        assert rejected.columns == df.columns
         for c in caches:
             c.unpersist()
 
@@ -282,7 +277,6 @@ def test_schedule_batch_counted_equivalence(spark):
         for h in range(4) for j, c in enumerate("abcdef")
     ] + [(f"https://h4.com/page-{c}", "h4", 3.0, 200) for c in "xyz"]
     df = spark.createDataFrame(rows, "url string, host string, score double, seq long")
-    all_urls = {r["url"] for r in df.collect()}
     order = [F.desc("score"), F.asc("url")]
 
     def reference(trap, batch_size):
@@ -311,17 +305,11 @@ def test_schedule_batch_counted_equivalence(spark):
             lazy = schedule_batch(df, budget=5, batch_size=batch_size,
                                   salt_buckets=2, **kw)
             assert {r["url"] for r in lazy.collect()} == want
-            got_df, n, rejected, caches = schedule_batch_counted(
-                df, budget=5, batch_size=batch_size, salt_buckets=2,
-                complement=True, **kw
+            got_df, n, caches = schedule_batch_counted(
+                df, budget=5, batch_size=batch_size, salt_buckets=2, **kw
             )
             got = {r["url"] for r in got_df.collect()}
-            rej_rows = rejected.collect()
-            rej = {r["url"] for r in rej_rows}
             assert got == want and n == len(want)
-            assert got | rej == all_urls
-            assert not got & rej and len(rej_rows) == len(rej)
-            assert rejected.columns == df.columns
             for c in caches:
                 c.unpersist()
 

@@ -55,7 +55,7 @@ def test_salted_topk_equals_single_stage_under_skew(spark):
         .cache()
     )
     budget = 7
-    salted, _, _ = topk(
+    salted = topk(
         df, ("host",), budget, [F.desc("score"), F.asc("url")], salt_buckets=8
     )
     w = Window.partitionBy("host").orderBy(F.desc("score"), F.asc("url"))
@@ -158,8 +158,11 @@ def test_frontier_tombstone_join_broadcast_vs_shuffle(spark, tmp_path):
     regardless of core count (BENCH/BASELINE.md round-3 decomposition)."""
     from adavnceseo_crawler_spark import schemas
     from adavnceseo_crawler_spark.catalog import SnapshotCatalog
-    from adavnceseo_crawler_spark.config import CrawlConfig
-    from adavnceseo_crawler_spark.plans.round import read_frontier, round_ts
+    from adavnceseo_crawler_spark.plans.round import (
+        CONSUMED_BROADCAST_ROWS,
+        read_frontier,
+        round_ts,
+    )
 
     cat = SnapshotCatalog(spark, str(tmp_path / "tswh"))
     base = spark.createDataFrame(
@@ -174,8 +177,7 @@ def test_frontier_tombstone_join_broadcast_vs_shuffle(spark, tmp_path):
                               schemas.FRONTIER_CONSUMED),
         mode="append",
     )
-    cfg = CrawlConfig()  # consumed_broadcast_rows = 100_000
-    bcast = read_frontier(cat, cfg, consumed_rows_hint=10)
+    bcast = read_frontier(cat, consumed_rows_hint=10)
     plan_b = bcast._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan_b, plan_b
     # the fixture is tiny, so Catalyst's size-based auto-broadcast would mask
@@ -184,7 +186,7 @@ def test_frontier_tombstone_join_broadcast_vs_shuffle(spark, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         shuf = read_frontier(
-            cat, cfg, consumed_rows_hint=cfg.consumed_broadcast_rows + 1
+            cat, consumed_rows_hint=CONSUMED_BROADCAST_ROWS + 1
         )
         plan_s = shuf._jdf.queryExecution().executedPlan().toString()
     finally:
@@ -216,8 +218,11 @@ def test_frontier_base_shuffles_once_through_tombstone_and_enrich(spark, tmp_pat
 
     from adavnceseo_crawler_spark import schemas
     from adavnceseo_crawler_spark.catalog import SnapshotCatalog
-    from adavnceseo_crawler_spark.config import CrawlConfig
-    from adavnceseo_crawler_spark.plans.round import read_frontier, round_ts
+    from adavnceseo_crawler_spark.plans.round import (
+        CONSUMED_BROADCAST_ROWS,
+        read_frontier,
+        round_ts,
+    )
 
     cat = SnapshotCatalog(spark, str(tmp_path / "xrwh"))
     cat.commit(
@@ -243,12 +248,11 @@ def test_frontier_base_shuffles_once_through_tombstone_and_enrich(spark, tmp_pat
         ),
         mode="overwrite",
     )
-    cfg = CrawlConfig()
     prev_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         frontier = read_frontier(
-            cat, cfg, consumed_rows_hint=cfg.consumed_broadcast_rows + 1
+            cat, consumed_rows_hint=CONSUMED_BROADCAST_ROWS + 1
         )
         meta_latest = (
             cat.read("url_metadata")

@@ -124,4 +124,12 @@ def test_checkpoint_stats_are_data(spark, tmp_path):
     times = meta["stats"]["times"]
     assert isinstance(times, dict)
     assert {"schedule", "dedup", "commits"} <= times.keys(), times
-    assert isinstance(meta["stats"]["commit_walls"], dict)
+    # round 1 is a compact round (compact_every=2): its commit walls hold the
+    # round's own append group and, marked as such, the compaction rewrites
+    assert meta["stats"]["compacted"] is True
+    walls = meta["stats"]["commit_walls"]
+    assert set(walls) == {
+        "domain_stats", "url_metadata", "frontier", "frontier_consumed",
+        "compact.url_metadata", "compact.frontier",
+    }, walls
+    assert all(isinstance(w, float) for w in walls.values()), walls

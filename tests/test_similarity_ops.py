@@ -3,8 +3,6 @@ express: vectorized-UDF ≡ pure-reference signatures, LSH recall vs brute
 force (measured, not assumed), LSH-verified dedup ≡ brute-force dedup, and
 the OLS training → persist → load → predict round trip."""
 
-import numpy as np
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
