@@ -14,7 +14,12 @@ overwrite, time travel, resume-from-latest — over plain partitioned Parquet:
   table metadata does), so ``read`` opens a table without the Spark job that
   parquet schema inference costs.  A snapshot registered without a write
   (``register_external``) or written before manifests carried the schema is
-  read by inference.
+  read by inference;
+* a manifest records the table's row count (``records``, Iceberg's
+  ``total-records`` snapshot summary), observed on the write that runs
+  anyway: an overwrite stores its own count, an append adds its count to the
+  previous total.  Callers read live sizes from here (``records``) instead of
+  counting a table or carrying the number alongside it.
 
 On a real cluster, swap this for the Iceberg catalog
 (``spark.sql.catalog.* = org.apache.iceberg.spark.SparkCatalog``) — the crawl
@@ -36,7 +41,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -51,6 +56,10 @@ class Snapshot:
     # registered without a write (register_external, manifest-only) or a
     # manifest written before tables carried their schema
     schema: dict[str, Any] | None = None
+    # total row count of the snapshot's dirs; 0 for a manifest-only
+    # snapshot, None for register_external or a manifest written before
+    # snapshots recorded their count
+    records: int | None = None
 
 
 class SnapshotCatalog:
@@ -84,7 +93,7 @@ class SnapshotCatalog:
                 out.append(
                     Snapshot(
                         d["snapshot_id"], d["mode"], d["dirs"],
-                        d.get("meta", {}), d.get("schema"),
+                        d.get("meta", {}), d.get("schema"), d.get("records"),
                     )
                 )
             except (json.JSONDecodeError, KeyError, OSError):
@@ -101,17 +110,23 @@ class SnapshotCatalog:
     ) -> tuple[Snapshot, float]:
         """Write ``df`` to the table's next ``snap-NNNNNN`` dir and return the
         snapshot it WOULD publish, plus the data-write wall seconds.  Nothing
-        is visible until ``_write_manifest`` runs on the returned snapshot."""
+        is visible until ``_write_manifest`` runs on the returned snapshot.
+        The written rows are counted by an observation on the write itself
+        (no extra job)."""
         assert mode in ("overwrite", "append")
         t0 = time.monotonic()
         prev = self.latest(table)
         sid = (prev.snapshot_id + 1) if prev else 0
         data_dir = os.path.join(self._tdir(table), f"snap-{sid:06d}")
-        df.write.mode("overwrite").parquet(data_dir)
-        dirs = [data_dir] if mode == "overwrite" else (prev.dirs if prev else []) + [
-            data_dir
-        ]
-        snap = Snapshot(sid, mode, dirs, meta or {}, df.schema.jsonValue())
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(data_dir)
+        dirs, records = [data_dir], int(obs.get["n"])
+        if mode == "append" and prev:
+            dirs = prev.dirs + dirs
+            records = None if prev.records is None else prev.records + records
+        snap = Snapshot(sid, mode, dirs, meta or {}, df.schema.jsonValue(), records)
         return snap, round(time.monotonic() - t0, 3)
 
     def commit(
@@ -208,7 +223,7 @@ class SnapshotCatalog:
         """Commit a data-less snapshot carrying only metadata — no Spark job.
         Used for the per-round checkpoint, whose payload lives entirely in
         the manifest's ``meta`` (round number + table snapshot ids), and to
-        empty a table: ``read`` returns None for it."""
+        empty a table: ``read`` returns None for it, ``records`` 0."""
         return self.register_external(table, [], meta)
 
     def register_external(
@@ -216,10 +231,12 @@ class SnapshotCatalog:
     ) -> Snapshot:
         """Register existing parquet dirs as an overwrite snapshot WITHOUT
         rewriting the data (Iceberg's ``add_files`` / external-location
-        pattern).  Used for large immutable inputs shared across runs."""
+        pattern).  Used for large immutable inputs shared across runs.  The
+        dirs' row count is unknown (``records`` None); no dirs hold 0 rows."""
         prev = self.latest(table)
         sid = (prev.snapshot_id + 1) if prev else 0
-        snap = Snapshot(sid, "overwrite", list(dirs), meta or {})
+        records = None if dirs else 0
+        snap = Snapshot(sid, "overwrite", list(dirs), meta or {}, records=records)
         self._write_manifest(table, snap)
         return snap
 
@@ -233,6 +250,7 @@ class SnapshotCatalog:
                 "dirs": snap.dirs,
                 "meta": snap.meta,
                 "schema": snap.schema,
+                "records": snap.records,
             },
             indent=1,
         )
@@ -260,6 +278,14 @@ class SnapshotCatalog:
         if snap.schema is not None:
             reader = reader.schema(StructType.fromJson(snap.schema))
         return reader.parquet(*snap.dirs)
+
+    def records(self, table: str) -> int | None:
+        """Row count of the table's latest snapshot, read from its manifest
+        (no job): 0 for a table with no snapshot or an emptied one, None when
+        the manifest does not record it (register_external, manifests written
+        before snapshots recorded their count)."""
+        snap = self.latest(table)
+        return 0 if snap is None else snap.records
 
     def exists(self, table: str) -> bool:
         return self.latest(table) is not None

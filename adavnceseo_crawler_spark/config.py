@@ -10,8 +10,9 @@ meaning in the iterative-batch model (SURVEY.md §0 "adopted semantics"):
 * ``batch_size``         — global per-round dequeue cap, from the reference's
   ``URL_BATCH_SIZE`` (settings.py:58) / ``get_next_urls(batch_size)``
   (url_frontier.py:76).
-* ``bloom_capacity`` / ``bloom_fpr`` — the reference's
-  ``BloomFilter(max_elements=10_000_000, error_rate=0.001)`` (url_frontier.py:24).
+* ``bloom_capacity`` — the reference's
+  ``BloomFilter(max_elements=10_000_000, error_rate=0.001)`` (url_frontier.py:24);
+  the error rate is ``operators.bloom.BloomParams.fpr``.
 * ``max_retries``        — settings.py:35.
 * ``user_agent``         — settings.py:64-66.
 """
@@ -40,11 +41,7 @@ class CrawlConfig:
     # filter (sharded, no broadcast at all).
     use_bloom: bool = False
     bloom_capacity: int = 10_000_000
-    bloom_fpr: float = 0.001
     bloom_buckets: int = 64
-
-    # skew handling: salted two-stage per-host top-k (SURVEY.md §4.1)
-    salt_buckets: int = 8
 
     # retry policy (fetcher/crawler.py:124-126, settings.py:35)
     max_retries: int = 3

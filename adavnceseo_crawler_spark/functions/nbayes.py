@@ -33,7 +33,11 @@ TOKEN_SPLIT = "[^a-z0-9]+"
 
 def doc_tokens(text_col: str = "text"):
     """lowercase alnum tokens; empty strings dropped (mirrors the oracle's
-    regexp_split_to_array + filter)."""
+    regexp_split_to_array + filter).  Also the BM25 index's tokenizer
+    (operators/search): the ES `standard` analyzer shape — the index the
+    reference queries defines no custom analyzer (elasticsearch_storage.py:
+    30-52), so Unicode word-boundary segmentation + lowercase, no stemming
+    or stopwords, which coincides with this split on the [a-z0-9] corpus."""
     return F.filter(
         F.split(F.lower(F.col(text_col)), TOKEN_SPLIT), lambda w: w != F.lit("")
     )

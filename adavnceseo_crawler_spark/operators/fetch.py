@@ -20,6 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# a scheduled batch of more rows than this is not broadcast (fetch_batch)
+BROADCAST_THRESHOLD = 10_000_000
+
 
 def crawl_time_col(url_hash) -> "F.Column":
     """0.1 + (int(sha256(url)[:8], 16) % 900) / 1000 — matches synth.crawl_time_of."""
@@ -31,25 +34,22 @@ def crawl_time_col(url_hash) -> "F.Column":
 
 
 def fetch_batch(
-    scheduled: DataFrame,
-    web: DataFrame,
-    n_scheduled: int | None = None,
-    broadcast_threshold: int = 10_000_000,
-) -> tuple[DataFrame, DataFrame]:
-    """(hits, misses) for the scheduled batch against the web.
+    scheduled: DataFrame, web: DataFrame, n_scheduled: int | None = None
+) -> DataFrame:
+    """The hits of the scheduled batch against the web (the caller derives
+    the misses from its parse output).
 
     The page payloads (html) must NEVER shuffle — at 100 TB that is the whole
     dataset moving.  So the hit path is an INNER hash join with the small
     scheduled batch broadcast as the build side: the web scan is probed in
-    place and parse inherits the scan's partitioning.  Misses are a urls-only
-    anti-join (no payload columns).
+    place and parse inherits the scan's partitioning.
 
     The broadcast build is driver-serial fixed cost (measured 4-8 s/round at
     ~3·10^5-row batches), so it is kept MINIMAL: only (url, depth) ship —
     url_hash and host are pure deterministic functions of the canonical url
     (the frontier computed them exactly this way) and are recomputed JVM-side
     on the hit rows, roughly halving the broadcast bytes.  When the caller
-    knows the batch exceeds ``broadcast_threshold`` rows the hint is dropped
+    knows the batch exceeds BROADCAST_THRESHOLD rows the hint is dropped
     and AQE picks the strategy at runtime from real sizes (north_rule: at
     10^7-URL rounds a forced driver collect of the batch is the wrong plan)."""
     from ..functions.urls import host_col, url_hash
@@ -57,10 +57,10 @@ def fetch_batch(
     slim = scheduled.select("url", "depth")
     build = (
         F.broadcast(slim)
-        if n_scheduled is None or n_scheduled <= broadcast_threshold
+        if n_scheduled is None or n_scheduled <= BROADCAST_THRESHOLD
         else slim
     )
-    hits = (
+    return (
         web.select("url", "html", "warc_ts", F.col("lang").alias("src_lang"))
         .join(build, "url", "inner")
         .withColumn("url_hash", url_hash(F.col("url")))
@@ -69,10 +69,3 @@ def fetch_batch(
         .withColumn("status_code", F.lit(200))
         .withColumn("crawl_time", crawl_time_col(F.col("url_hash")))
     )
-    misses = (
-        scheduled.join(web.select("url"), "url", "left_anti")
-        .withColumn("success", F.lit(False))
-        .withColumn("status_code", F.lit(404))
-        .withColumn("crawl_time", F.lit(None).cast("double"))
-    )
-    return hits, misses

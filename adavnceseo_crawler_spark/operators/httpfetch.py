@@ -154,9 +154,10 @@ def fetch_batch_http(
     retry_delay: float = 1.0,
     politeness_delay: float = 0.0,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Drop-in replacement for fetch.fetch_batch returning (hits, misses, raw)
-    with the same (hits, misses) column contract, so the crawl round is
-    oblivious to which fetch operator ran.  ``base_url_rewrite=(prefix,
+    """The http counterpart of fetch.fetch_batch: returns (hits, misses,
+    raw), the hits with fetch_batch's columns, so the crawl round's parse
+    is oblivious to which fetch operator ran; the misses keep the full
+    scheduled row (the round's retries need it).  ``base_url_rewrite=(prefix,
     replacement)`` swaps a PLAIN URL PREFIX both ways, letting tests point
     canonical URLs at a local fixture server (e.g. "https://" ->
     "http://127.0.0.1:PORT/").

@@ -16,6 +16,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.nbayes import doc_tokens
+
 FIELD_WEIGHTS = (("title", 3.0), ("description", 2.0), ("text", 1.0))
 
 # english-analyzer vocabulary guard: above this many raw-term hits the
@@ -64,19 +66,6 @@ def search_pages(parsed: DataFrame, query: str, size: int = 10) -> DataFrame:
 # elasticsearch_storage.py:89-111 runs Lucene BM25 — this is the native
 # re-expression; the weighted-TF search above remains the cheap approximation)
 # ---------------------------------------------------------------------------
-def doc_tokens(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
-    """Lowercase alnum-boundary tokens — the ES `standard` analyzer shape
-    (the index the reference queries uses the default analyzer:
-    elasticsearch_storage.py:30-52 defines no custom analyzer, and `standard`
-    = Unicode word-boundary segmentation + lowercase, NO stemming/stopwords).
-    On the [a-z0-9] corpus here the two tokenizations coincide exactly; a
-    full-Unicode corpus would swap this split pattern for `\\W+` with the
-    same plan shape."""
-    return F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda w: w != F.lit("")
-    )
-
-
 # ---------------------------------------------------------------------------
 # "english"-analyzer variant (ES `english` analyzer ≈ standard tokenizer +
 # stopword removal + possessive stripping + stemming).  The reference's index
@@ -232,7 +221,7 @@ def inverted_index(
     """(id, term, tf) postings — explode(tokens) → hash-agg counts.  At scale
     this is persisted bucketed by term so scorers join co-partitioned."""
     toks = df.select(
-        F.col(id_col), F.explode(doc_tokens(df, id_col, text_col)).alias("term")
+        F.col(id_col), F.explode(doc_tokens(text_col)).alias("term")
     )
     return toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
 
@@ -456,7 +445,7 @@ def bm25_topk(
         scores = _bm25_score_postings(idx, dl, terms, k1, b, id_col)
     else:
         tokenized = df.select(
-            F.col(id_col), doc_tokens(df, id_col, text_col).alias("tokens")
+            F.col(id_col), doc_tokens(text_col).alias("tokens")
         )
         scores = bm25_token_scores(tokenized, terms, k1, b, id_col, "tokens")
     return (

@@ -16,7 +16,7 @@ in-process RAM (url_frontier.py:24) and Redis is flushed on startup
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
@@ -66,20 +66,18 @@ def bootstrap(
     elif web is not None:  # http fetch mode reads no web table
         cat.commit("web", web, mode="overwrite")
     cat.commit("robots", robots, mode="overwrite")
-    # the seed count rides the checkpoint as round 0's frontier-size hint,
-    # observed on the write like every round's frontier commit
-    obs_front = Observation()
-    frontier0 = seed_frontier(seeds).observe(
-        obs_front, F.count(F.lit(1)).alias("n")
+    # the frontier manifest records the seed count: round 0 reads its urls_in
+    # from there and runs no frontier.count()
+    cat.commit(
+        "frontier", seed_frontier(seeds), mode="overwrite", meta={"round": 0}
     )
-    cat.commit("frontier", frontier0, mode="overwrite", meta={"round": 0})
     seen0 = cat.read("frontier").select(
         "url_hash", "url", F.lit(0).alias("round")
     )
     cat.commit("url_seen", seen0, mode="append", meta={"round": 0})
     if cfg.use_bloom:
         params = bloomops.BloomParams(
-            cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_buckets
+            capacity=cfg.bloom_capacity, buckets=cfg.bloom_buckets
         )
         shards0 = bloomops.empty_shards(spark, params)
         seeds_cand = cat.read("frontier").select("url", "url_hash", "host", "depth")
@@ -94,10 +92,7 @@ def bootstrap(
         )
         for df in caches:
             df.unpersist()
-    _checkpoint(
-        spark, cat, -1,
-        {"next_frontier_rows": int(obs_front.get["n"]), "next_consumed_rows": 0},
-    )
+    _checkpoint(spark, cat, -1, {})
 
 
 TABLES = (
@@ -168,14 +163,6 @@ def run_crawl(
     max_rounds = max_rounds if max_rounds is not None else cfg.max_rounds
     rollback_to_checkpoint(spark, cat)
     start = last_completed_round(cat) + 1
-    # resume hints from the checkpointed stats: next_frontier_rows is the
-    # next round's urls_in, observed during the frontier write (saves the
-    # per-round frontier.count() job, see round.py); next_consumed_rows is
-    # the live tombstone count that drives the broadcast-vs-shuffle choice
-    # of the merge-on-read frontier read's consumed anti-join
-    ckpt_stats = cat.latest("checkpoint").meta.get("stats", {})
-    hint = ckpt_stats.get("next_frontier_rows")
-    cons_hint = ckpt_stats.get("next_consumed_rows")
     stats = []
     # write-behind pipeline, one round deep: round r's bulky appends flush
     # while round r+1's schedule stage runs; round r's CHECKPOINT is written
@@ -195,10 +182,7 @@ def run_crawl(
 
     r = start
     while r < max_rounds:
-        s = run_round(
-            spark, cat, cfg, r, urls_in_hint=hint, consumed_rows_hint=cons_hint,
-            on_barrier=_settle,
-        )
+        s = run_round(spark, cat, cfg, r, on_barrier=_settle)
         if s.get("done"):
             # refresh mode (cfg.recrawl_every): a drained frontier is the
             # normal end-state of a bounded synthetic web, but a production
@@ -207,9 +191,7 @@ def run_crawl(
             # this round.  Settle first: crawl_log is a deferred table.
             if cfg.recrawl_every:
                 _settle()
-                n_revived = _recrawl_revive(spark, cat, cfg, r)
-                if n_revived > 0:
-                    hint, cons_hint = n_revived, cons_hint
+                if _recrawl_revive(spark, cat, cfg, r) > 0:
                     continue
             break
         handle = s.pop("pending", None)
@@ -218,8 +200,6 @@ def run_crawl(
             _checkpoint(spark, cat, r, s)
         else:
             pending = (r, s, handle)
-        hint = s.get("next_frontier_rows")
-        cons_hint = s.get("next_consumed_rows")
         r += 1
     _settle()
     return stats

@@ -49,8 +49,8 @@ from ..operators.robotsops import apply_robots
 ROUND_EPOCH = _dt.datetime(2025, 6, 1, 0, 0, 0)
 
 # read-side tombstone anti-join: broadcast the consumed set only while it is
-# genuinely small (≤ this many rows, known from the checkpoint-carried
-# count), else take the shuffle join.  The broadcast build is driver-serial
+# genuinely small (≤ this many rows, as the frontier_consumed manifest
+# records), else take the shuffle join.  The broadcast build is driver-serial
 # — measured ~10 s flat at 1.5M tombstones REGARDLESS of core count
 # (BENCH/BASELINE.md round-3 decomposition), exactly the kind of fixed cost
 # the scaling criterion punishes — while the shuffle path distributes; and
@@ -71,9 +71,7 @@ def _empty(spark: SparkSession, schema) -> DataFrame:
     return spark.createDataFrame([], schema)
 
 
-def read_frontier(
-    cat: SnapshotCatalog, consumed_rows_hint: int | None = None
-) -> DataFrame | None:
+def read_frontier(cat: SnapshotCatalog) -> DataFrame | None:
     """Resolved (live) frontier view under merge-on-read maintenance.
 
     The committed ``frontier`` table is append-mostly: normal rounds append
@@ -91,25 +89,21 @@ def read_frontier(
     that immediately follows, so Catalyst reuses the exchange and the
     frontier base shuffles ONCE (a compound-key anti-join partitions on both
     keys and forced a second full shuffle of the base — measured +40 s/round
-    at the 4-core 4M-page scaling shape).  While the checkpoint-carried
-    tombstone count is small the grouped set is broadcast (no shuffle of the
-    base at all); past CONSUMED_BROADCAST_ROWS it falls back to the
-    shuffle join — at web scale the tombstone set cannot be broadcast."""
+    at the 4-core 4M-page scaling shape).  While the tombstone count the
+    catalog records is small the grouped set is broadcast (no shuffle of the
+    base at all); past CONSUMED_BROADCAST_ROWS, or when the manifest does not
+    record it, it falls back to the shuffle join — at web scale the
+    tombstone set cannot be broadcast.  Columns are in schemas.FRONTIER
+    order either way."""
     base = cat.read("frontier")
-    if base is None:
-        return None
-    if consumed_rows_hint == 0:
-        return base
     cons = cat.read("frontier_consumed")
-    if cons is None:
+    n_cons = cat.records("frontier_consumed")
+    if base is None or cons is None or n_cons == 0:
         return base
     cons_sets = (
         cons.groupBy("url_hash").agg(F.collect_set("round").alias("_crounds"))
     )
-    if (
-        consumed_rows_hint is not None
-        and consumed_rows_hint <= CONSUMED_BROADCAST_ROWS
-    ):
+    if n_cons is not None and n_cons <= CONSUMED_BROADCAST_ROWS:
         cons_sets = F.broadcast(cons_sets)
     return (
         base.join(cons_sets, "url_hash", "left")
@@ -117,7 +111,7 @@ def read_frontier(
             F.col("_crounds").isNull()
             | ~F.array_contains(F.col("_crounds"), F.col("round"))
         )
-        .drop("_crounds")
+        .select([f.name for f in schemas.FRONTIER.fields])
     )
 
 
@@ -186,21 +180,14 @@ def recrawl_rows_for(
     )
 
 
-def compact_state(
-    cat: SnapshotCatalog, round_no: int, consumed_rows: int | None
-) -> dict[str, float]:
+def compact_state(cat: SnapshotCatalog, round_no: int) -> dict[str, float]:
     """Merge-on-read compaction after round ``round_no``'s commit group (the
     Iceberg ``rewrite_data_files`` shape): the ``frontier`` base is
     rewritten as its live view (read_frontier, ``round`` restamped to
     ``round_no + 1``), ``url_metadata`` as its latest row per key, and the
     tombstones are then emptied by a manifest-only snapshot (no write job).
-    ``consumed_rows`` is the tombstone count after the round's append.
     Returns the rewrites' data-write walls, keyed ``compact.<table>``."""
-    live = (
-        read_frontier(cat, consumed_rows)
-        .withColumn("round", F.lit(round_no + 1))
-        .select([f.name for f in schemas.FRONTIER.fields])
-    )
+    live = read_frontier(cat).withColumn("round", F.lit(round_no + 1))
     latest = resolve_latest(cat.read("url_metadata"), "url_hash", "last_crawled")
     walls = cat.commit_many([
         ("url_metadata", latest, "overwrite", {"round": round_no}),
@@ -215,8 +202,6 @@ def run_round(
     cat: SnapshotCatalog,
     cfg: CrawlConfig,
     round_no: int,
-    urls_in_hint: int | None = None,
-    consumed_rows_hint: int | None = None,
     on_barrier=None,
 ) -> dict:
     t0 = time.monotonic()
@@ -229,16 +214,19 @@ def run_round(
         times[label] = round(times.get(label, 0.0) + (t - _last[0]), 3)
         _last[0] = t
 
-    frontier = read_frontier(cat, consumed_rows_hint)
+    frontier = read_frontier(cat)
     if frontier is None:
         return {"round": round_no, "scheduled": 0, "fetched": 0, "done": True}
     frontier = frontier.cache()
-    # the frontier row count is known from the PREVIOUS round's write
-    # observation (threaded through the checkpoint meta) — a standalone
-    # count() job here is pure per-round fixed cost that does not shrink
-    # with cores; it runs only when no hint exists (a checkpoint from before
-    # bootstrap observed its seed count, a direct run_round call)
-    urls_in = urls_in_hint if urls_in_hint is not None else frontier.count()
+    # the live row count is read from the manifests: every tombstone
+    # consumes exactly one live frontier row.  A standalone count() job here
+    # is pure per-round fixed cost that does not shrink with cores; it runs
+    # only when a manifest does not record its count
+    n_front, n_cons = cat.records("frontier"), cat.records("frontier_consumed")
+    if n_front is None or n_cons is None:
+        urls_in = frontier.count()
+    else:
+        urls_in = n_front - n_cons
     if urls_in == 0:
         frontier.unpersist()
         return {"round": round_no, "scheduled": 0, "fetched": 0, "done": True}
@@ -335,8 +323,8 @@ def run_round(
     # whenever the batch cap cannot bind.  Un-dequeued rows get no tombstone:
     # they stay in the frontier as they are
     scheduled, n_scheduled, _sched_caches = schedule_batch_counted(
-        allowed, cfg.politeness_budget, cfg.batch_size, cfg.salt_buckets,
-        mode=cfg.dequeue_mode, trap_threshold=cfg.trap_template_threshold,
+        allowed, cfg.politeness_budget, cfg.batch_size, mode=cfg.dequeue_mode,
+        trap_threshold=cfg.trap_template_threshold,
         trap_cap=cfg.trap_admit_per_round,
     )
     tick("schedule")
@@ -360,7 +348,7 @@ def run_round(
             politeness_delay=cfg.politeness_delay,
         )
     else:
-        ok, _ = fetch_batch(scheduled, web, n_scheduled=n_scheduled)
+        ok = fetch_batch(scheduled, web, n_scheduled=n_scheduled)
         failed = None  # derived below from the CACHED parse result
 
     # ---- parse (U1) + quality (A8) ----------------------------------------------
@@ -444,7 +432,9 @@ def run_round(
     # they ride the write-behind group and are released at its settle
     if cfg.use_bloom:
         new_cand = new_cand.observe(obs_links, F.count(F.lit(1)).alias("n"))
-        params = bloomops.BloomParams(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_buckets)
+        params = bloomops.BloomParams(
+            capacity=cfg.bloom_capacity, buckets=cfg.bloom_buckets
+        )
         shards = cat.read("bloom_shards")
         survivors, new_shards, _dedup_caches = bloomops.filter_and_update(
             new_cand, shards, params
@@ -669,33 +659,22 @@ def run_round(
     # frontier maintenance, merge-on-read: the frontier gains adds (new
     # links ∪ retries ∪ re-enqueues); dequeued (scheduled) and robots-blocked
     # rows are tombstoned by (url_hash, enqueue-round); un-dequeued rows stay
-    # in place.  Next round's urls_in = urls_in - consumed + adds, both
-    # observed on writes that run anyway.
+    # in place.  The catalog records both tables' row counts, from which
+    # the next round reads its urls_in.
     adds = retry.unionByName(new_entries).select(*front_cols)
     if recrawl_rows is not None:
         adds = adds.unionByName(recrawl_rows.select(*front_cols))
-    obs_adds = Observation()
-    obs_cons = Observation()
-    consumed = (
-        scheduled.select("url_hash", "round")
-        .unionByName(blocked.select("url_hash", "round"))
-        .observe(obs_cons, F.count(F.lit(1)).alias("n"))
+    consumed = scheduled.select("url_hash", "round").unionByName(
+        blocked.select("url_hash", "round")
     )
     commit_walls = cat.commit_many([
         ("domain_stats",
          dstats_new.select([f.name for f in schemas.DOMAIN_STATS.fields]),
          "overwrite", m_this),
         ("url_metadata", upd, "append", m_this),
-        ("frontier",
-         adds.observe(obs_adds, F.count(F.lit(1)).alias("n")),
-         "append", m_next),
+        ("frontier", adds, "append", m_next),
         ("frontier_consumed", consumed, "append", m_next),
     ])
-    n_consumed = int(obs_cons.get["n"])
-    next_frontier_rows = urls_in - n_consumed + int(obs_adds.get["n"])
-    next_consumed_rows = (
-        consumed_rows_hint + n_consumed if consumed_rows_hint is not None else None
-    )
     # hand the bulky appends to the write-behind pipeline.  Caches split two
     # ways: frames whose lineage backs a deferred write (parsed → pages,
     # new_log → crawl_log, the dedup caches → url_seen / bloom_shards,
@@ -715,8 +694,7 @@ def run_round(
     # writes started above
     compact = cfg.compact_every <= 1 or (round_no + 1) % cfg.compact_every == 0
     if compact:
-        commit_walls.update(compact_state(cat, round_no, next_consumed_rows))
-        next_consumed_rows = 0
+        commit_walls.update(compact_state(cat, round_no))
     tick("commits")
 
     return {
@@ -730,8 +708,6 @@ def run_round(
         "wall_ms": wall_ms,
         "times": times,
         "commit_walls": commit_walls,
-        "next_frontier_rows": next_frontier_rows,
-        "next_consumed_rows": next_consumed_rows,
         "compacted": compact,
         "pending": pending,
         "done": False,

@@ -1840,13 +1840,14 @@ def q54(spark, sf):
     of the token stream (title = first 5 tokens, description = first 12,
     body = all) built identically on both sides; the oracle replays all
     three BM25 pipelines + the boosted max in SQL — bit-identical."""
-    from .operators.search import bm25_best_fields, doc_tokens
+    from .functions.nbayes import doc_tokens
+    from .operators.search import bm25_best_fields
 
     d = _t(spark, sf, "documents")
     # tokenize once: all three field frames are slices of this array, and
     # each field scorer consumes its frame from several subplans (idx,
     # dfreq, dl) — without the cut the corpus re-tokenizes ~9x
-    base = d.select("doc_id", doc_tokens(d).alias("tokens")).localCheckpoint(
+    base = d.select("doc_id", doc_tokens().alias("tokens")).localCheckpoint(
         eager=False
     )
     fields = {

@@ -16,10 +16,15 @@ def test_overwrite_and_append(tmp_catalog, spark):
     df1 = spark.createDataFrame([(1,), (2,)], "a int")
     df2 = spark.createDataFrame([(3,)], "a int")
     tmp_catalog.commit("t", df1, mode="overwrite")
+    assert tmp_catalog.records("t") == 2
     tmp_catalog.commit("t", df2, mode="append")
     assert tmp_catalog.read("t").count() == 3
+    # an append adds its count to the previous total
+    assert tmp_catalog.records("t") == 3
     tmp_catalog.commit("t", df2, mode="overwrite")
     assert tmp_catalog.read("t").count() == 1
+    assert tmp_catalog.records("t") == 1
+    assert tmp_catalog.records("nope") == 0
 
 
 def test_time_travel_and_rollback(tmp_catalog, spark):
@@ -27,9 +32,14 @@ def test_time_travel_and_rollback(tmp_catalog, spark):
         tmp_catalog.commit("t", spark.range(i + 1), mode="overwrite", meta={"i": i})
     assert tmp_catalog.read("t", snapshot_id=0).count() == 1
     assert tmp_catalog.read("t").count() == 3
+    assert tmp_catalog.records("t") == 3
     tmp_catalog.rollback("t", 1)
     assert tmp_catalog.read("t").count() == 2
     assert tmp_catalog.latest("t").meta["i"] == 1
+    # the count lives in the manifest: it follows the rollback and survives
+    # a fresh catalog instance reading the manifests back from disk
+    assert tmp_catalog.records("t") == 2
+    assert SnapshotCatalog(spark, tmp_catalog.root).records("t") == 2
 
 
 def test_torn_manifest_invisible(tmp_catalog, spark):
@@ -73,6 +83,11 @@ def test_commit_manifest_only_no_data_dir(tmp_catalog, spark):
     assert snap.snapshot_id == 0 and snap.dirs == []
     assert tmp_catalog.latest("ckpt").meta["round"] == 3
     assert tmp_catalog.read("ckpt") is None
+    assert tmp_catalog.records("ckpt") == 0
+    # registered dirs were never counted
+    tmp_catalog.commit("t", spark.range(2))
+    tmp_catalog.register_external("ext", tmp_catalog.latest("t").dirs)
+    assert tmp_catalog.records("ext") is None
     tmp_catalog.commit_manifest_only("ckpt", meta={"round": 4})
     assert tmp_catalog.latest("ckpt").meta["round"] == 4
     tmp_catalog.rollback("ckpt", 0)
@@ -125,14 +140,14 @@ def test_read_frontier_tombstone_anti_join(tmp_catalog, spark):
         spark.createDataFrame([frow(1, "https://hostx/a", "ha")], schemas.FRONTIER),
         mode="append",
     )
-    live = {
-        (r["url_hash"], r["round"])
-        for r in read_frontier(tmp_catalog, consumed_rows_hint=1).collect()
-    }
+    front = read_frontier(tmp_catalog)
+    live = {(r["url_hash"], r["round"]) for r in front.collect()}
     assert live == {("hb", 0), ("ha", 1)}
-    # hint=0 short-circuits the anti-join entirely (returns base as-is)
-    raw = read_frontier(tmp_catalog, consumed_rows_hint=0).count()
-    assert raw == 3
+    # the joined view keeps the table's column order
+    assert front.columns == [f.name for f in schemas.FRONTIER.fields]
+    # each tombstone consumed exactly one live row
+    n_live = tmp_catalog.records("frontier") - tmp_catalog.records("frontier_consumed")
+    assert n_live == len(live)
 
 
 def test_compact_state_rewrites_the_live_view(tmp_catalog, spark):
@@ -183,16 +198,17 @@ def test_compact_state_rewrites_the_live_view(tmp_catalog, spark):
     cols = [f.name for f in schemas.FRONTIER.fields]
     live = sorted(
         tuple({**r.asDict(), "round": 1}[c] for c in cols)
-        for r in read_frontier(cat, consumed_rows_hint=1).collect()
+        for r in read_frontier(cat).collect()
     )
     assert len(live) == 4
 
-    walls = compact_state(cat, 0, 1)
+    walls = compact_state(cat, 0)
     assert set(walls) == {"compact.frontier", "compact.url_metadata"}
     assert cat.read("frontier").columns == cols
     assert sorted(tuple(r) for r in cat.read("frontier").collect()) == live
     assert cat.read("frontier_consumed") is None
-    assert read_frontier(cat, consumed_rows_hint=0).count() == 4
+    assert cat.records("frontier") == 4 and cat.records("frontier_consumed") == 0
+    assert read_frontier(cat).count() == 4
     meta = {
         r["url_hash"]: r["content_length"]
         for r in cat.read("url_metadata").collect()

@@ -1,6 +1,6 @@
 """Real-HTTP fetch operator (S5 cluster path) against an in-process fixture
 server: success / 404 / timeout / retry-after-network-error paths, and the
-(hits, misses) contract shared with the synthetic fetch join."""
+hit columns shared with the synthetic fetch join."""
 
 import threading
 import time

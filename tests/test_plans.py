@@ -150,19 +150,16 @@ def test_bm25_term_filter_pushed_below_aggregate(spark):
     assert any("Aggregate" in ln for ln in lines[: term_filter_idxs[0]])
 
 
-def test_frontier_tombstone_join_broadcast_vs_shuffle(spark, tmp_path):
+def test_frontier_tombstone_join_broadcast_vs_shuffle(spark, tmp_path, monkeypatch):
     """The MoR frontier read broadcasts the consumed tombstones only while
-    the checkpoint-carried count is genuinely small; past the threshold it
+    the count the catalog records is genuinely small; past the threshold it
     must take the distributed shuffle anti-join — the broadcast build is
     driver-serial and was measured as a flat ~10s at 1.5M tombstones
     regardless of core count (BENCH/BASELINE.md round-3 decomposition)."""
     from adavnceseo_crawler_spark import schemas
     from adavnceseo_crawler_spark.catalog import SnapshotCatalog
-    from adavnceseo_crawler_spark.plans.round import (
-        CONSUMED_BROADCAST_ROWS,
-        read_frontier,
-        round_ts,
-    )
+    from adavnceseo_crawler_spark.plans import round as round_mod
+    from adavnceseo_crawler_spark.plans.round import read_frontier, round_ts
 
     cat = SnapshotCatalog(spark, str(tmp_path / "tswh"))
     base = spark.createDataFrame(
@@ -177,17 +174,17 @@ def test_frontier_tombstone_join_broadcast_vs_shuffle(spark, tmp_path):
                               schemas.FRONTIER_CONSUMED),
         mode="append",
     )
-    bcast = read_frontier(cat, consumed_rows_hint=10)
+    assert cat.records("frontier_consumed") == 10
+    bcast = read_frontier(cat)
     plan_b = bcast._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan_b, plan_b
     # the fixture is tiny, so Catalyst's size-based auto-broadcast would mask
     # the hint decision — disable it to observe the above-threshold plan
     prev_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    monkeypatch.setattr(round_mod, "CONSUMED_BROADCAST_ROWS", 9)
     try:
-        shuf = read_frontier(
-            cat, consumed_rows_hint=CONSUMED_BROADCAST_ROWS + 1
-        )
+        shuf = read_frontier(cat)
         plan_s = shuf._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thr)
@@ -205,7 +202,9 @@ def test_frontier_tombstone_join_broadcast_vs_shuffle(spark, tmp_path):
     assert rows_b == rows_s
 
 
-def test_frontier_base_shuffles_once_through_tombstone_and_enrich(spark, tmp_path):
+def test_frontier_base_shuffles_once_through_tombstone_and_enrich(
+    spark, tmp_path, monkeypatch
+):
     """VERDICT r3 #7: the MoR read's single-key tombstone join must leave the
     frontier base partitioned on url_hash so the url_metadata enrich join
     reuses that exchange — the compound-key (url_hash, round) variant forced
@@ -218,11 +217,8 @@ def test_frontier_base_shuffles_once_through_tombstone_and_enrich(spark, tmp_pat
 
     from adavnceseo_crawler_spark import schemas
     from adavnceseo_crawler_spark.catalog import SnapshotCatalog
-    from adavnceseo_crawler_spark.plans.round import (
-        CONSUMED_BROADCAST_ROWS,
-        read_frontier,
-        round_ts,
-    )
+    from adavnceseo_crawler_spark.plans import round as round_mod
+    from adavnceseo_crawler_spark.plans.round import read_frontier, round_ts
 
     cat = SnapshotCatalog(spark, str(tmp_path / "xrwh"))
     cat.commit(
@@ -250,10 +246,9 @@ def test_frontier_base_shuffles_once_through_tombstone_and_enrich(spark, tmp_pat
     )
     prev_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    monkeypatch.setattr(round_mod, "CONSUMED_BROADCAST_ROWS", 9)
     try:
-        frontier = read_frontier(
-            cat, consumed_rows_hint=CONSUMED_BROADCAST_ROWS + 1
-        )
+        frontier = read_frontier(cat)
         meta_latest = (
             cat.read("url_metadata")
             .select("url_hash", "last_crawled")

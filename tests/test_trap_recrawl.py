@@ -310,7 +310,7 @@ def test_compact_round_keeps_carried_refresh_score(spark, tmp_path):
     cat.commit("frontier", carried, mode="append", meta={"round": 0})
     # re-record the bootstrap checkpoint so resume's rollback keeps the
     # injected row (appends after a checkpoint are rolled back by design)
-    loop._checkpoint(spark, cat, -1, {"next_consumed_rows": 0})
+    loop._checkpoint(spark, cat, -1, {})
     stats = loop.run_crawl(spark, cat, cfg)
     assert stats[0]["scheduled"] == 1 and stats[0]["fetched"] == 1
     rows = {
