@@ -381,15 +381,3 @@ def resolve_latest(df: DataFrame, key: str, version: str) -> DataFrame:
         .drop("_v_rn")
     )
 
-
-def merge_upsert(old: DataFrame | None, updates: DataFrame, key: str) -> DataFrame:
-    """MERGE INTO ... WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT (S9/J7).
-
-    The reference upserts rows by primary key via SQLAlchemy session.merge
-    (postgres_storage.py:68-99) and Redis HSET (url_frontier.py:183-186).  On
-    Iceberg this is a native row-level MERGE; on the plain-Parquet backend it
-    is expressed as anti-join + union (updates win), committed as an
-    overwrite snapshot."""
-    if old is None:
-        return updates
-    return old.join(updates.select(key), key, "left_anti").unionByName(updates)

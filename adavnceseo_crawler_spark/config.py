@@ -28,9 +28,6 @@ class CrawlConfig:
     politeness_budget: int = 5
     batch_size: int = 1000
     max_rounds: int = 5
-    # 'priority' = intended zrange dequeue (url_frontier.py:82-88);
-    # 'fifo' = live-path LPOP (url_frontier.py:240-252)
-    dequeue_mode: str = "priority"
 
     # URL-seen structure
     # False => exact path (the small-scale oracle): scan url_seen and

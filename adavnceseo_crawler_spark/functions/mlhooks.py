@@ -1,23 +1,19 @@
-"""ML scoring hooks (U10/U11, C17) — pluggable ``predict_batch_udf`` slots.
+"""ML scoring (U10/U11, C17): URL features and exactly-fit linear models.
 
 The reference blends a heuristic score with a GradientBoosting/XGBoost model
 over URL features + MiniLM embeddings (ml/url_prioritizer.py:78-193, blend
 0.7/0.3 at :175) and a zero-shot + RandomForest content classifier
 (ml/content_classifier.py:66-165).  Torch/sklearn are not in this sandbox, so
-the engine ships the **feature extraction as native Column expressions** and a
-**vectorized prediction plug point**: any ``f(pandas.DataFrame) -> pd.Series``
-(a loaded sklearn model's ``predict``, a Triton client, …) slots in as an
-Arrow-batched UDF.  A deterministic linear stub stands in for tests.
+the engine ships the **feature extraction as native Column expressions**
+(``url_feature_cols``, q41) and the model family that trains exactly inside
+Spark: least squares from one aggregate of integer sufficient statistics
+(``fit_ols2`` / ``fit_ols3``, q42/q53), blended by ``blended_score``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # URL feature flags (ml/url_prioritizer.py:28-34, 82-95)
 URL_FEATURE_PATTERNS = {
@@ -41,50 +37,6 @@ def url_feature_cols(url: Column) -> dict[str, Column]:
         F.filter(F.split(path, "/"), lambda x: x != F.lit(""))
     )
     return feats
-
-
-def with_url_features(df: DataFrame, url: str = "url") -> DataFrame:
-    for name, col in url_feature_cols(F.col(url)).items():
-        df = df.withColumn(name, col)
-    return df
-
-
-FEATURE_ORDER = (
-    "has_date", "is_pagination", "has_keywords", "has_extension",
-    "has_query", "url_len", "path_depth",
-)
-
-
-def make_predict_udf(
-    predict: Callable[[pd.DataFrame], pd.Series],
-) -> Callable[..., Column]:
-    """Wrap a batch predictor as an Arrow-batched pandas UDF over the
-    FEATURE_ORDER columns.  On a real cluster, ``predict`` closes over a
-    broadcast sklearn/xgboost model (predict_batch_udf pattern)."""
-
-    @F.pandas_udf(T.DoubleType())
-    def _udf(*cols: pd.Series) -> pd.Series:
-        pdf = pd.DataFrame({n: c for n, c in zip(FEATURE_ORDER, cols)})
-        return predict(pdf).astype(float)
-
-    def apply(df_or_cols) -> Column:
-        return _udf(*[F.col(c) for c in FEATURE_ORDER])
-
-    return apply
-
-
-def stub_linear_model(pdf: pd.DataFrame) -> pd.Series:
-    """Deterministic stand-in for the trained GBR (ml/url_prioritizer.py:116):
-    a fixed-weight linear scorer squashed to (0, 1)."""
-    z = (
-        0.6 * pdf["has_keywords"]
-        + 0.3 * pdf["has_date"]
-        - 0.4 * pdf["is_pagination"]
-        - 0.2 * pdf["has_query"]
-        - 0.01 * pdf["path_depth"]
-        - 0.001 * pdf["url_len"]
-    )
-    return 1.0 / (1.0 + (-z).map(lambda v: 2.718281828459045**v))
 
 
 # ---------------------------------------------------------------------------
@@ -236,11 +188,3 @@ def blended_score(heuristic: Column, ml_score: Column) -> Column:
     """0.7 × heuristic + 0.3 × model (ml/url_prioritizer.py:175)."""
     return heuristic * 0.7 + ml_score * 0.3
 
-
-def ml_rank_urls(df: DataFrame, heuristic_col: str = "score") -> DataFrame:
-    """Full U10 pipeline with the stub model: features → predict → blend."""
-    feat = with_url_features(df)
-    apply_model = make_predict_udf(stub_linear_model)
-    return feat.withColumn("ml_score", apply_model(feat)).withColumn(
-        "blended", blended_score(F.col(heuristic_col), F.col("ml_score"))
-    )

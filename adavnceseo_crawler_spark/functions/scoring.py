@@ -229,8 +229,3 @@ def domain_stats_update(old_stats: DataFrame | None, new_log: DataFrame) -> Data
     ).select("host", *_SUM_COLS, "last_crawled")
     return _derive_stats(merged)
 
-
-def domain_score_from_log(crawl_log: DataFrame) -> DataFrame:
-    """Full-log recompute (oracle/small-scale path): same result as folding
-    domain_stats_update over the per-round logs."""
-    return _derive_stats(_round_delta(crawl_log))

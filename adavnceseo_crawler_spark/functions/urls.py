@@ -130,16 +130,6 @@ def canonicalize_url_udf(s: pd.Series) -> pd.Series:
     return s.map(canonicalize_url, na_action="ignore")
 
 
-@F.pandas_udf(T.StringType())
-def resolve_link_udf(base: pd.Series, href: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            resolve_and_canonicalize(b, h) if (b is not None and h is not None) else None
-            for b, h in zip(base, href)
-        ]
-    )
-
-
 # ---------------------------------------------------------------------------
 # column helpers (JVM-side, codegen'd)
 # ---------------------------------------------------------------------------

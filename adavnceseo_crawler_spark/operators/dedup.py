@@ -13,7 +13,6 @@ hash-aggregate.  Brute-force Jaccard is provided for oracle checks at small n.
 from __future__ import annotations
 
 import sys
-from hashlib import blake2b
 
 import numpy as np
 import pandas as pd
@@ -81,14 +80,6 @@ def jaccard_pairs(
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-_MERSENNE = (1 << 61) - 1
-
-
-def _h64(s: str) -> int:
-    """Deterministic 64-bit string hash (executor-stable, unlike hash())."""
-    return int.from_bytes(blake2b(s.encode("utf-8"), digest_size=8).digest(), "little")
-
-
 def _hash_params(n_hashes: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
     """(a, b) for the hash family h_i(x) = a_i*x + b_i mod 2^64 with a_i odd —
     a bijection on uint64, so min over images is a valid MinHash permutation
@@ -234,43 +225,6 @@ def minhash_candidates(
     the star-pair rail to degenerate buckets (see _bucket_pairs)."""
     sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_k)
     return _bucket_pairs(_band_buckets(sig, n_hashes, bands), max_bucket)
-
-
-def minhash_dedup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    n_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 5,
-) -> DataFrame:
-    """LSH candidates verified by signature-estimated Jaccard ≥ threshold.
-    Signatures are computed ONCE and reused for banding and verification
-    (lazy localCheckpoint: one Arrow UDF pass, blocks self-clean via the
-    ContextCleaner when the query's plan is dropped — no cache leak across
-    repeated runs, ADVICE r5)."""
-    sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_k).localCheckpoint(eager=False)
-    cand = _bucket_pairs(_band_buckets(sig, n_hashes, bands), None)
-    sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "est_jaccard",
-            F.size(
-                F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                    lambda v: v == 1,
-                )
-            )
-            / F.lit(float(n_hashes)),
-        )
-    )
-    return est.filter(F.col("est_jaccard") >= threshold).select(
-        "id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -202,30 +202,6 @@ def en_stem_py(t: str) -> str:
     return t
 
 
-def doc_tokens_en(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
-    """English tokens (apostrophes kept in-token so possessives reach the
-    stemmer, as with Lucene's standard tokenizer + possessive filter) → drop
-    stopwords → stem.  dl (token count) is taken AFTER stopword removal,
-    matching Lucene (stopwords don't count toward field length; stemming
-    never changes the count)."""
-    raw = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9']+"),
-        lambda w: (w != F.lit("")) & ~w.isin(*EN_STOPWORDS),
-    )
-    return F.transform(raw, en_stem)
-
-
-def inverted_index(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, term, tf) postings — explode(tokens) → hash-agg counts.  At scale
-    this is persisted bucketed by term so scorers join co-partitioned."""
-    toks = df.select(
-        F.col(id_col), F.explode(doc_tokens(text_col)).alias("term")
-    )
-    return toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-
-
 def bm25_token_scores(
     tokenized: DataFrame,
     terms: list[str],

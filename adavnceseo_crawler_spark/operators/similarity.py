@@ -86,10 +86,6 @@ def cosine_pairs(
 #     scale preset for ANN dedup (asserted ≥ 0.9 in
 #     tests/test_similarity_ops.py::test_lsh_high_recall_preset_on_planted).
 LSH_HIGH_RECALL = {"n_tables": 16, "n_bits": 8}
-# IVF on the same fixture (24 data-sampled cells): n_probe 16 → recall 1.0,
-# n_probe 8 → 0.956; probe-count is the recall knob (q49 uses 4 for the
-# oracle-checkable small config).
-IVF_HIGH_RECALL_N_PROBE = 16
 
 
 # -- deterministic ±1 (Rademacher) hyperplanes -------------------------------

@@ -323,7 +323,7 @@ def run_round(
     # whenever the batch cap cannot bind.  Un-dequeued rows get no tombstone:
     # they stay in the frontier as they are
     scheduled, n_scheduled, _sched_caches = schedule_batch_counted(
-        allowed, cfg.politeness_budget, cfg.batch_size, mode=cfg.dequeue_mode,
+        allowed, cfg.politeness_budget, cfg.batch_size,
         trap_threshold=cfg.trap_template_threshold,
         trap_cap=cfg.trap_admit_per_round,
     )

@@ -1669,8 +1669,7 @@ def q43(spark, sf):
 )
 def q44(spark, sf):
     """U7 shape: dictionary-gazetteer entity mention extraction (deterministic
-    stand-in for the spaCy/BERT NER of processor.py:289-366; the model slots
-    in via mlhooks.make_predict_udf on a real cluster).  Round 1 used a
+    stand-in for the spaCy/BERT NER of processor.py:289-366).  Round 1 used a
     capitalized-token rule that matched NOTHING in the all-lowercase driver
     corpus (vacuous 0-row green); the gazetteer checks real, non-empty
     mention counts."""
@@ -2464,8 +2463,8 @@ def q56(spark, sf):
     """T1 analyzer option: BM25 with the english analyzer — inflected query
     terms are stemmed driver-side (en_stem_py), document tokens are stemmed
     in the JVM (en_stem regexp chain), and Lucene's field-length norm counts
-    post-stopword tokens (doc_tokens_en).  Same exact-integer avgdl and
-    fixed-term-order summation as q46 keep doubles bit-identical."""
+    post-stopword tokens (bm25_topk's english path).  Same exact-integer
+    avgdl and fixed-term-order summation as q46 keep doubles bit-identical."""
     from .operators.search import bm25_topk
 
     d = _t(spark, sf, "documents")

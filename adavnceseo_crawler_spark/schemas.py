@@ -118,23 +118,6 @@ DOMAIN_STATS = T.StructType(
     ]
 )
 
-# append-only crawl log (replaces ES/Kafka sinks, SURVEY.md §1.2)
-CRAWL_LOG = T.StructType(
-    [
-        T.StructField("round", T.IntegerType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("url_hash", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("status_code", T.IntegerType(), True),
-        T.StructField("success", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("crawl_time", T.DoubleType(), True),
-        T.StructField("content_length", T.LongType(), True),
-        T.StructField("quality_score", T.DoubleType(), True),
-        T.StructField("fetched_ts", T.TimestampType(), True),
-    ]
-)
-
 # ParsedPage struct (html_parser.py:11-23)
 IMAGE = T.StructType(
     [
@@ -176,12 +159,5 @@ ROUND_METRICS = T.StructType(
         T.StructField("links_discovered", T.LongType(), True),
         T.StructField("bytes", T.LongType(), True),
         T.StructField("wall_ms", T.LongType(), True),
-    ]
-)
-
-WEB_GRAPH = T.StructType(
-    [
-        T.StructField("src_url", T.StringType(), False),
-        T.StructField("dst_url", T.StringType(), False),
     ]
 )

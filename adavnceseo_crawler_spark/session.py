@@ -59,6 +59,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
+        # the SQL status store keeps every finished execution's plan and
+        # metrics (1000 by default), ~0.65 MB each; a crawl round runs ~15
+        # and, with the UI off, nothing reads them, so they only pin driver
+        # heap.  spark.ui.retainedJobs stays: count_jobs and statusTracker
+        # read the job store
+        .config("spark.sql.ui.retainedExecutions", "10")
         # python workers fork from the package's daemon, which spares each
         # task a re-read of pyspark.zip's directory (see worker_daemon.py)
         .config("spark.python.daemon.module", f"{__package__}.worker_daemon")

@@ -334,27 +334,6 @@ def gen_pages(spark, n_pages: int, n_hosts: int, partitions: int = 32):
     )
 
 
-def gen_web_graph(spark, n_pages: int, n_hosts: int, partitions: int = 32):
-    import pandas as pd
-
-    from .schemas import WEB_GRAPH
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            src, dst = [], []
-            for i in pdf["id"].to_numpy():
-                u = url_of(int(i), n_hosts)
-                for t in link_targets_of(int(i), n_pages):
-                    src.append(u)
-                    dst.append(url_of(t, n_hosts))
-            yield pd.DataFrame({"src_url": src, "dst_url": dst})
-
-    return (
-        spark.range(0, n_pages, numPartitions=partitions)
-        .mapInPandas(batches, schema=WEB_GRAPH)
-    )
-
-
 def gen_robots(spark, n_hosts: int):
     from .schemas import ROBOTS
 

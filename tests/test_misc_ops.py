@@ -1,8 +1,6 @@
-"""Streaming wrapper, multimodal plumbing, CSV backup (S12), ML hooks (U10),
-search surface (T1/T2), analytics views (A1-A3)."""
-
-import glob
-import os
+"""Multimodal plumbing and codecs, CSV backup (S12), search surface (T1/T2,
+English analyzer), FIFO dequeue (S3), point gets (S8/S10), scheduler
+equivalence."""
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -27,25 +25,6 @@ def test_multimodal_features(spark):
     assert {(r["media_id"], tuple(r["feature"])) for r in rows} == {
         (r["media_id"], tuple(r["feature"])) for r in rows2
     }
-
-
-def test_ml_hooks_blend(spark):
-    from adavnceseo_crawler_spark.functions.mlhooks import ml_rank_urls
-
-    df = spark.createDataFrame(
-        [
-            ("https://a.com/article/2024/01/x", 1.0),
-            ("https://a.com/page/9?q=1", 1.0),
-        ],
-        "url string, score double",
-    )
-    out = {r["url"]: r for r in ml_rank_urls(df).collect()}
-    art = out["https://a.com/article/2024/01/x"]
-    pag = out["https://a.com/page/9?q=1"]
-    assert art["has_keywords"] == 1 and art["has_date"] == 1
-    assert pag["is_pagination"] == 1 and pag["has_query"] == 1
-    assert art["ml_score"] > pag["ml_score"]  # stub model prefers articles
-    assert abs(art["blended"] - (0.7 * 1.0 + 0.3 * art["ml_score"])) < 1e-12
 
 
 def test_csv_backup_roundtrip(spark, tmp_path):
@@ -85,68 +64,6 @@ def test_search_surface(spark):
     assert {d["url"] for d in dom} == {"https://b.com/2", "https://b.com/3"}
 
 
-def test_streaming_availablenow(spark, tmp_path):
-    from adavnceseo_crawler_spark import schemas
-    from adavnceseo_crawler_spark.streaming import stream_crawl_log
-
-    import datetime as dt
-
-    rows = [
-        (0, f"https://h{i%3}/p{i}", "h", f"host{i%3}", 200, True, None, 0.1,
-         100, 1.0, dt.datetime(2025, 6, 1, i % 4))
-        for i in range(40)
-    ]
-    src_dir = str(tmp_path / "log")
-    spark.createDataFrame(rows, schemas.CRAWL_LOG).write.parquet(src_dir)
-    q = stream_crawl_log(
-        spark, src_dir, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path / "out"))
-    got1 = out.agg(F.sum("n")).collect()[0][0]
-    # append mode emits only windows sealed by the watermark (max ts 03:00,
-    # watermark 2h -> only the [00,01) window = rows with hour 0)
-    assert got1 == 10
-    # a later batch advances the watermark -> earlier windows finalize
-    late = [
-        (1, "https://h9/x", "h", "host9", 200, True, None, 0.1, 100, 1.0,
-         dt.datetime(2025, 6, 1, 10))
-    ]
-    spark.createDataFrame(late, schemas.CRAWL_LOG).write.mode("append").parquet(src_dir)
-    q2 = stream_crawl_log(
-        spark, src_dir, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    q2.awaitTermination(120)
-    out2 = spark.read.parquet(str(tmp_path / "out"))
-    got2 = out2.agg(F.sum("n")).collect()[0][0]
-    assert got2 == 40  # all 40 original fetches now emitted, exactly once
-
-
-def test_analytics_views(spark):
-    import datetime as dt
-
-    from adavnceseo_crawler_spark import schemas
-    from adavnceseo_crawler_spark.operators.analytics import (
-        daily_histogram,
-        domain_stats_sql,
-        top_domains,
-    )
-
-    rows = [
-        (0, f"https://h{i%2}/p{i}", "h", f"host{i%2}", 200, True, None,
-         0.5, 1000 * (i % 2 + 1), 1.0, dt.datetime(2025, 6, 1 + i % 2))
-        for i in range(20)
-    ]
-    log = spark.createDataFrame(rows, schemas.CRAWL_LOG)
-    stats = {r["host"]: r for r in domain_stats_sql(log).collect()}
-    assert stats["host0"]["page_count"] == 10
-    assert stats["host0"]["avg_content_length"] == 1000.0
-    top = top_domains(log, k=1).collect()
-    assert len(top) == 1
-    hist = daily_histogram(log).collect()
-    assert sum(r["n"] for r in hist) == 20
-
-
 def test_fifo_dequeue_mode(spark):
     """S3: the live-path LPOP special case — order by arrival seq."""
     from adavnceseo_crawler_spark.operators.politeness import schedule_batch
@@ -163,19 +80,6 @@ def test_fifo_dequeue_mode(spark):
     assert [r["url"] for r in fifo.collect()] == ["https://h2/c", "https://h1/a"]
     prio = schedule_batch(df, budget=5, batch_size=2, salt_buckets=2)
     assert [r["url"] for r in prio.collect()] == ["https://h1/b", "https://h2/c"]
-
-
-def test_merge_upsert(spark):
-    """S9/J7: MERGE upsert semantics (updates win, inserts appended)."""
-    from adavnceseo_crawler_spark.catalog import merge_upsert
-
-    old = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
-    upd = spark.createDataFrame([("b", 20), ("c", 30)], "k string, v int")
-    got = {(r["k"], r["v"]) for r in merge_upsert(old, upd, "k").collect()}
-    assert got == {("a", 1), ("b", 20), ("c", 30)}
-    assert {(r["k"], r["v"]) for r in merge_upsert(None, upd, "k").collect()} == {
-        ("b", 20), ("c", 30),
-    }
 
 
 def test_point_get_pruned(spark):
@@ -197,40 +101,6 @@ def test_point_get_pruned(spark):
     assert "PushedFilters" in plan and "url_hash" in plan
     rows = q.collect()
     assert len(rows) == 1 and rows[0]["url"] == "https://h/7"
-
-
-def test_stateful_host_stats(spark, tmp_path):
-    """applyInPandasWithState: state persists across AvailableNow drains."""
-    import datetime as dt
-
-    from adavnceseo_crawler_spark import schemas
-    from adavnceseo_crawler_spark.streaming.stateful import stream_host_stats
-
-    def rows(n0, n1, hour):
-        return [
-            (0, f"https://h{i%2}/p{i}-{hour}", "h", f"host{i%2}", 200, i % 4 != 3,
-             None, 0.1, 100, 1.0, dt.datetime(2025, 6, 1, hour))
-            for i in range(n0, n1)
-        ]
-
-    src = str(tmp_path / "slog")
-    spark.createDataFrame(rows(0, 20, 0), schemas.CRAWL_LOG).write.parquet(src)
-    q = stream_host_stats(spark, src, str(tmp_path / "sout"), str(tmp_path / "sckpt"))
-    q.awaitTermination(120)
-    # second drain with more data: running totals must include the first
-    spark.createDataFrame(rows(20, 30, 1), schemas.CRAWL_LOG).write.mode(
-        "append"
-    ).parquet(src)
-    q2 = stream_host_stats(spark, src, str(tmp_path / "sout"), str(tmp_path / "sckpt"))
-    q2.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path / "sout"))
-    latest = {
-        r["host"]: r
-        for r in out.orderBy("total_count").collect()  # last wins per host
-    }
-    assert latest["host0"]["total_count"] == 15
-    assert latest["host1"]["total_count"] == 15
-    assert latest["host0"]["total_count"] + latest["host1"]["total_count"] == 30
 
 
 def test_schedule_batch_counted_equivalence(spark):
@@ -680,43 +550,6 @@ def test_jpeg_codec_pure():
     trunc = encode_jpeg(grad, quality=75)
     with pytest.raises(ValueError):
         decode_jpeg(trunc[: len(trunc) // 2])
-
-
-def test_streaming_dedup_across_drains(spark, tmp_path):
-    """Streaming exact dedup: first arrival of a text hash is emitted,
-    duplicates are suppressed WITHIN a drain and ACROSS resumed drains
-    (state survives via the checkpoint)."""
-    import datetime as dt
-
-    from adavnceseo_crawler_spark.streaming.dedup_stream import (
-        DOC_STREAM,
-        stream_dedup_documents,
-    )
-
-    src = str(tmp_path / "docs")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    ts = dt.datetime(2025, 6, 1)
-    batch1 = [(i, f"text {i % 4}", ts) for i in range(12)]  # 4 distinct
-    spark.createDataFrame(batch1, DOC_STREAM).write.parquet(src)
-    q = stream_dedup_documents(spark, src, out, ckpt)
-    q.awaitTermination(120)
-    got1 = spark.read.parquet(out)
-    assert got1.count() == 4
-    assert got1.select("text_hash").distinct().count() == 4
-
-    # second drain: 2 repeats of old texts + 2 genuinely new ones
-    batch2 = [(100, "text 0", ts), (101, "text 3", ts),
-              (102, "brand new A", ts), (103, "brand new B", ts)]
-    spark.createDataFrame(batch2, DOC_STREAM).write.mode("append").parquet(src)
-    q2 = stream_dedup_documents(spark, src, out, ckpt)
-    q2.awaitTermination(120)
-    got2 = spark.read.parquet(out)
-    assert got2.count() == 6  # only the two new texts were added
-    texts = {r["text"] for r in got2.collect()}
-    assert {"brand new A", "brand new B"} <= texts
-    assert not {r for r in got2.groupBy("text_hash").count().collect()
-                if r["count"] > 1}
 
 
 def test_jpeg_fill_bytes_and_standalone_markers():

@@ -1,4 +1,5 @@
-"""Session factory: python workers import the package from any cwd."""
+"""Session factory: python workers import the package from any cwd, and the
+SQL status store is bounded."""
 
 import os
 import subprocess
@@ -42,3 +43,8 @@ def test_workers_import_package_outside_repo(tmp_path):
     )
     assert r.returncode == 0, r.stderr[-3000:]
     assert r.stdout.split()[-1] == "3"
+
+
+def test_sql_status_store_is_bounded(spark):
+    """The SQL status store keeps only the last few executions."""
+    assert spark.conf.get("spark.sql.ui.retainedExecutions") == "10"
