@@ -17,7 +17,7 @@ import sys
 import numpy as np
 import pandas as pd
 
-# the vectorized simhash/minhash kernels reinterpret uint64 hash words as
+# the vectorized simhash kernel reinterprets uint64 hash words as
 # byte arrays (``.view(np.uint8)`` before unpackbits, and ``packbits(...)
 # .view(np.uint64)`` to reassemble) — that round-trip is only bit-stable on
 # little-endian hosts, and the DuckDB oracles assume the same layout.
@@ -51,7 +51,7 @@ def jaccard_pairs(
 
     Input: exploded (id, token) rows.  shared/(|A|+|B|-shared) via a
     self-equi-join on token — the join explodes on very frequent tokens, so at
-    scale feed this only LSH candidate pairs (see minhash_candidates)."""
+    scale feed this only LSH candidate pairs (see minhash_verified_pairs)."""
     g = tokens.select(id_col, token_col).distinct()
     sizes = g.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     a = g.select(F.col(id_col).alias("id_a"), F.col(token_col).alias("tok"))
@@ -88,72 +88,6 @@ def _hash_params(n_hashes: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]
     a = (rng.randint(0, 1 << 62, size=n_hashes).astype(np.uint64) << np.uint64(1)) | np.uint64(1)
     b = rng.randint(0, 1 << 62, size=n_hashes).astype(np.uint64)
     return a, b
-
-
-_P = np.uint64(1_000_003)  # odd -> invertible mod 2^64
-_IP = np.uint64(pow(1_000_003, -1, 1 << 64))
-
-
-def _mix64(x: np.ndarray) -> np.ndarray:
-    # splitmix64 finalizer (vectorized) — fixes the weak low bits of the
-    # mod-2^64 polynomial hash
-    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return x ^ (x >> np.uint64(31))
-
-
-def _shingle_hashes(t: str, k: int) -> np.ndarray:
-    """All k-byte shingle hashes of t, fully vectorized (rolling polynomial
-    hash mod 2^64 via prefix sums, splitmix64-finalized, deduplicated)."""
-    b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
-    n = b.shape[0]
-    if n < k:
-        return np.zeros(0, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        ipows = np.empty(n + 1, dtype=np.uint64)
-        ipows[0] = np.uint64(1)
-        np.multiply.accumulate(np.full(n, _IP, dtype=np.uint64), out=ipows[1:])
-        pows = np.empty(n + 1, dtype=np.uint64)
-        pows[0] = np.uint64(1)
-        np.multiply.accumulate(np.full(n, _P, dtype=np.uint64), out=pows[1:])
-        pref = np.zeros(n + 1, dtype=np.uint64)
-        np.cumsum((b + np.uint64(1)) * ipows[:n], out=pref[1:])  # wraps mod 2^64
-        # window [i, i+k): (pref[i+k] - pref[i]) * p^(i+k-1)
-        h = (pref[k:] - pref[:-k]) * pows[k - 1 : n]
-    return np.unique(_mix64(h))
-
-
-def make_minhash_udf(n_hashes: int = 64, shingle_k: int = 5, seed: int = 42):
-    """pandas UDF: text -> array<long> MinHash signature over k-char shingles."""
-    a_p, b_p = _hash_params(n_hashes, seed)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def minhash(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            sh = _shingle_hashes(t, shingle_k) if t is not None else None
-            if sh is None or sh.shape[0] == 0:
-                out.append([0] * n_hashes)
-                continue
-            with np.errstate(over="ignore"):
-                sig = (sh[None, :] * a_p[:, None] + b_p[:, None]).min(axis=1)
-            out.append([int(x) for x in sig.view(np.int64)])
-        return pd.Series(out)
-
-    return minhash
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 64,
-    shingle_k: int = 5,
-) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("id"),
-        make_minhash_udf(n_hashes, shingle_k)(F.col(text_col)).alias("sig"),
-    )
 
 
 def _band_buckets(sig: DataFrame, n_hashes: int, bands: int) -> DataFrame:
@@ -206,25 +140,6 @@ def _bucket_pairs(banded: DataFrame, max_bucket: int | None) -> DataFrame:
     if star is not None:
         cand = cand.unionByName(star)
     return cand.distinct()
-
-
-def minhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 5,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """MinHash → band → bucket-join candidate pairs (id_a < id_b).
-
-    rows_per_band = n_hashes/bands; docs sharing any full band land in the
-    same bucket.  The bucket join is an equi-join on (band, band_hash) — no
-    cross product, shuffles on the bucket key only.  ``max_bucket`` applies
-    the star-pair rail to degenerate buckets (see _bucket_pairs)."""
-    sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_k)
-    return _bucket_pairs(_band_buckets(sig, n_hashes, bands), max_bucket)
 
 
 # ---------------------------------------------------------------------------

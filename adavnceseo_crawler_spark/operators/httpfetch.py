@@ -12,17 +12,26 @@ mirroring the reference fetcher's semantics (crawler/core/fetcher/crawler.py):
   requeue stays the frontier's job, exactly as in the batch engine)
 * network error / timeout -> retried in-request up to MAX_RETRIES with
   backoff min(300, 2^attempt × delay)       (settings.py:35, crawler.py:124-126)
-* per-host serialization + politeness gap   (crawler.py:81 sleeps
-  POLITENESS_DELAY between hits; here: URLs are grouped by host inside the
-  partition, hosts run concurrently on a thread pool capped by
-  MAX_CONCURRENT_REQUESTS (settings.py:34), requests within a host run
-  sequentially with the configured delay)
+* per-server serialization + politeness gap (crawler.py:81 sleeps
+  POLITENESS_DELAY between hits): a partition's URLs are grouped into LANES
+  keyed by the server actually dialed (the netloc of the URL as requested,
+  i.e. after any base_url_rewrite).  One thread runs each lane, issuing one
+  request at a time; lanes run concurrently on a pool capped by
+  MAX_CONCURRENT_REQUESTS (settings.py:34).  Two consecutive requests to the
+  same logical host keep the configured delay between them.  This is
+  Mercator's politeness rule (Heydon & Najork 1999): at most one outstanding
+  request per server.
 
 Scale notes: the scheduled batch is repartitioned BY HOST before the fetch
 stage so one task owns a host (politeness needs no cross-task coordination —
-the per-round budget already capped the per-host batch).  Payloads are born
-in the fetch task's partition and flow straight into parse — they never
-shuffle, same invariant as the synthetic join path.
+the per-round budget already capped the per-host batch).  Without a rewrite
+each host is its own server, so lanes are hosts and the hosts of a task run
+concurrently.  With a rewrite (a proxy prefix, a fixture server) every host
+maps onto one server, and a task holds at most ONE connection to it: a round
+opens at most one connection per fetch task instead of up to 16 per task,
+which overflowed a small accept queue into 1/3/7 s SYN retransmits.  Payloads
+are born in the fetch task's partition and flow straight into parse — they
+never shuffle, same invariant as the synthetic join path.
 
 Uses stdlib urllib (aiohttp is not installed in this sandbox); the thread
 pool gives the same per-partition concurrency shape.
@@ -32,7 +41,9 @@ from __future__ import annotations
 
 import time
 from concurrent.futures import ThreadPoolExecutor
-from typing import Iterator
+from itertools import zip_longest
+from typing import Iterable, Iterator
+from urllib.parse import urlsplit
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -52,6 +63,30 @@ FETCH_RESULT = T.StructType(
         T.StructField("error", T.StringType(), True),
     ]
 )
+
+# lane threads per fetch task (the reference's settings.py:34 cap)
+MAX_CONCURRENT_REQUESTS = 16
+
+
+def fetch_lanes(urls: Iterable[str], hosts: Iterable[str]) -> list[list[int]]:
+    """Row indices grouped into lanes, one per server dialed.
+
+    A host joins the lane of the netloc its first URL dials, so all of a
+    host's rows share one lane in their original order.  Within a lane the
+    hosts take turns (round-robin), so one host's politeness gap can be
+    spent on another host's request."""
+    by_netloc: dict[str, list[list[int]]] = {}
+    by_host: dict[str, list[int]] = {}
+    for i, (url, host) in enumerate(zip(urls, hosts)):
+        queue = by_host.get(host)
+        if queue is None:
+            queue = by_host[host] = []
+            by_netloc.setdefault(urlsplit(url).netloc, []).append(queue)
+        queue.append(i)
+    return [
+        [i for turn in zip_longest(*queues) for i in turn if i is not None]
+        for queues in by_netloc.values()
+    ]
 
 
 def fetch_one(
@@ -97,33 +132,38 @@ def http_fetch_batch(
     max_retries: int = 3,
     retry_delay: float = 1.0,
     politeness_delay: float = 0.0,
-    max_concurrency: int = 16,
 ) -> DataFrame:
     """scheduled(url, url_hash, host, depth, ...) -> FETCH_RESULT rows via
-    batched HTTP per partition (hosts concurrent, per-host sequential)."""
+    batched HTTP per partition: one lane per server dialed (fetch_lanes),
+    lanes concurrent, one request in flight per lane, and at least
+    ``politeness_delay`` between two requests to the same host.  A task thus
+    holds at most one connection per server.  Output rows keep the input
+    order."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            by_host: dict[str, list[int]] = {}
-            for i, h in enumerate(pdf["host"]):
-                by_host.setdefault(h, []).append(i)
-
+            urls, hosts = pdf["url"].tolist(), pdf["host"].tolist()
+            lanes = fetch_lanes(urls, hosts)
             results: list[tuple] = [None] * len(pdf)  # type: ignore[list-item]
 
-            def run_host(idxs: list[int]) -> None:
-                for j, i in enumerate(idxs):
-                    if j and politeness_delay:
-                        time.sleep(politeness_delay)
-                    url = pdf["url"].iat[i]
+            def run_lane(idxs: list[int]) -> None:
+                last_end: dict[str, float] = {}  # host -> its last request's end
+                for i in idxs:
+                    host = hosts[i]
+                    if politeness_delay and host in last_end:
+                        wait = last_end[host] + politeness_delay - time.monotonic()
+                        if wait > 0:
+                            time.sleep(wait)
                     status, ok, body, elapsed, err = fetch_one(
-                        url, user_agent, timeout, max_retries, retry_delay
+                        urls[i], user_agent, timeout, max_retries, retry_delay
                     )
+                    last_end[host] = time.monotonic()
                     results[i] = (
-                        url,
+                        urls[i],
                         pdf["url_hash"].iat[i] if "url_hash" in pdf else None,
-                        pdf["host"].iat[i],
+                        host,
                         int(pdf["depth"].iat[i]) if "depth" in pdf else None,
                         status,
                         ok,
@@ -132,9 +172,9 @@ def http_fetch_batch(
                         err,
                     )
 
-            workers = max(1, min(max_concurrency, len(by_host)))
+            workers = min(MAX_CONCURRENT_REQUESTS, len(lanes))
             with ThreadPoolExecutor(max_workers=workers) as pool:
-                list(pool.map(run_host, by_host.values()))
+                list(pool.map(run_lane, lanes))
             yield pd.DataFrame(results, columns=[f.name for f in FETCH_RESULT.fields])
 
     cols = [c for c in ("url", "url_hash", "host", "depth") if c in scheduled.columns]

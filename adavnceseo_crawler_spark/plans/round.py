@@ -332,8 +332,9 @@ def run_round(
     # ---- fetch (S5/J6) ---------------------------------------------------------
     # synthetic: hits = web ⋈ broadcast(scheduled): html never shuffles, parse
     # inherits the web scan's partitioning (fetch.py docstring).
-    # http: batched real HTTP per host-partition (operators/httpfetch.py) —
-    # payloads are born in the fetch task and flow straight into parse.
+    # http: batched real HTTP, one lane per server dialed in each fetch task
+    # (operators/httpfetch.py) — payloads are born in the fetch task and flow
+    # straight into parse.
     raw_fetch = None
     if cfg.fetch_mode == "http":
         from ..operators.httpfetch import fetch_batch_http
@@ -472,10 +473,17 @@ def run_round(
         .agg(
             F.count(F.lit(1)).alias("pages_fetched"),
             F.sum(F.octet_length("html")).alias("bytes"),
+            F.max("crawl_time").alias("fetch_max_s"),
         )
         .collect()
     )
     n_fetched = sum(r["pages_fetched"] for r in part_stats)
+    # the slowest fetch's crawl_time: a round that ran long says whether a
+    # fetch did it (crawl_time also feeds avg_crawl_time's scoring threshold)
+    fetch_max_s = max(
+        (r["fetch_max_s"] for r in part_stats if r["fetch_max_s"] is not None),
+        default=None,
+    )
     n_failed = n_scheduled - n_fetched
     wall_ms = int((time.monotonic() - t0) * 1000)
     metrics_rows = [
@@ -706,6 +714,7 @@ def run_round(
         "links": n_links,
         "new_urls": n_new,
         "wall_ms": wall_ms,
+        "fetch_max_s": fetch_max_s,
         "times": times,
         "commit_walls": commit_walls,
         "compacted": compact,

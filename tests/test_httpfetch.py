@@ -1,5 +1,6 @@
 """Real-HTTP fetch operator (S5 cluster path) against an in-process fixture
-server: success / 404 / timeout / retry-after-network-error paths, and the
+server: success / 404 / timeout / retry-after-network-error paths, the
+per-server lanes (one request in flight per server per fetch task), and the
 hit columns shared with the synthetic fetch join."""
 
 import threading
@@ -160,6 +161,103 @@ def test_hits_misses_contract_and_parse(spark, http_server):
         _Handler.request_counts
     )
     raw.unpersist()
+
+
+def test_fetch_lanes_group_by_server():
+    """Lanes are keyed by the server dialed: hosts rewritten onto one netloc
+    share a lane, distinct netlocs get distinct lanes, and each host keeps
+    its row order (hosts take turns inside a lane)."""
+    from adavnceseo_crawler_spark.operators.httpfetch import fetch_lanes
+
+    rows = [
+        ("http://127.0.0.1:9000/a/1", "a"),
+        ("http://127.0.0.1:9000/b/1", "b"),
+        ("http://127.0.0.1:9000/a/2", "a"),
+        ("https://c.example/1", "c.example"),
+        ("http://127.0.0.1:9000/a/3", "a"),
+        ("https://d.example/1", "d.example"),
+        ("https://c.example/2", "c.example"),
+    ]
+    # hosts a and b share the rewritten server's lane and take turns in it;
+    # each host keeps its own row order
+    assert fetch_lanes(*zip(*rows)) == [[0, 1, 2, 4], [3, 6], [5]]
+    # without a rewrite every host is its own server
+    plain = [(f"https://h{k % 3}.example/{k}", f"h{k % 3}.example") for k in range(7)]
+    assert fetch_lanes(*zip(*plain)) == [[0, 3, 6], [1, 4], [2, 5]]
+
+
+class _LaneHandler(BaseHTTPRequestHandler):
+    """Holds each request briefly and records the peak number in flight and
+    each path's arrival time (server clock)."""
+
+    lock = threading.Lock()
+    inflight = 0
+    peak = 0
+    arrivals: list[tuple[str, float]] = []
+
+    def do_GET(self):  # noqa: N802
+        cls = _LaneHandler
+        with cls.lock:
+            cls.arrivals.append((self.path, time.monotonic()))
+            cls.inflight += 1
+            cls.peak = max(cls.peak, cls.inflight)
+        try:
+            time.sleep(0.02)
+            body = b"<html><body>ok</body></html>"
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+        finally:
+            with cls.lock:
+                cls.inflight -= 1
+
+    def log_message(self, *a):  # silence
+        pass
+
+
+def test_one_connection_per_server_per_fetch_task(spark):
+    """With every host rewritten onto one server, each fetch task holds at
+    most one connection to it: the server never sees more requests in flight
+    than there are fetch tasks, and a host's requests stay at least
+    politeness_delay apart."""
+    from adavnceseo_crawler_spark.operators.httpfetch import fetch_batch_http
+
+    class _Server(ThreadingHTTPServer):
+        request_queue_size = 128  # no dropped SYNs: measure the client only
+
+    _LaneHandler.arrivals.clear()
+    _LaneHandler.peak = 0
+    srv = _Server(("127.0.0.1", 0), _LaneHandler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    delay = 0.05
+    urls = [f"https://lanehost{k % 20}/page/{k}" for k in range(40)]
+    try:
+        ok, _, raw = fetch_batch_http(
+            _scheduled(spark, urls),
+            user_agent=UA,
+            base_url_rewrite=("https://", f"http://127.0.0.1:{srv.server_port}/"),
+            timeout=5.0,
+            max_retries=0,
+            politeness_delay=delay,
+        )
+        assert sorted(r["url"] for r in ok.collect()) == sorted(urls)
+        # tasks that fetched = partitions of the persisted fetch result
+        n_tasks = raw.select(F.spark_partition_id()).distinct().count()
+        raw.unpersist()
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+    assert len(_LaneHandler.arrivals) == 40
+    assert 1 <= _LaneHandler.peak <= n_tasks, (_LaneHandler.peak, n_tasks)
+    by_host: dict[str, list[float]] = {}
+    for path, t in _LaneHandler.arrivals:
+        by_host.setdefault(path.split("/")[1], []).append(t)
+    assert len(by_host) == 20
+    for host, ts in by_host.items():
+        ts.sort()
+        assert all(b - a >= delay for a, b in zip(ts, ts[1:])), (host, ts)
 
 
 def test_full_crawl_rounds_over_http(spark, http_server, tmp_path):

@@ -367,22 +367,6 @@ def test_ivf_topk_scores_exact_and_prunes(spark):
     assert [(r["vec_id"], r["cos"]) for r in full] == brute_top
 
 
-def test_charshingle_minhash_estimate_variant(spark):
-    """Char-shingle MinHash banding: exact duplicates share every band, so
-    they are always a candidate pair."""
-    from adavnceseo_crawler_spark.operators.dedup import minhash_candidates
-
-    rows = [
-        (0, "alpha bravo charlie delta echo foxtrot golf hotel india"),
-        (1, "alpha bravo charlie delta echo foxtrot golf hotel india"),  # dup of 0
-        (2, "zulu yankee xray whiskey victor uniform tango sierra"),
-        (3, "0123 4567 89ab cdef 0123 4567 89ab cdef 0123 4567"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    cand = {(r["id_a"], r["id_b"]) for r in minhash_candidates(d).collect()}
-    assert (0, 1) in cand  # identical signatures share every band
-
-
 def test_ols3_fit_recovers_coefficients(spark):
     """y = 5 + 2·f1 - 3·f2 + 4·f3 exactly -> the 3-feature Cramer solve
     must recover all four coefficients (exact integer sufficient stats)."""
